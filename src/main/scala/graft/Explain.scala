@@ -2,26 +2,22 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import graft.core.GraftSession
 
 /** Physical-plan audit: dumps `explain(formatted)` for every declared
   * query so scan pushdown (`PushedFilters`, `ReadSchema`), broadcast
   * choices, and whole-stage-codegen coverage can be reviewed per round.
   *
   * Run: `sbt "runMain graft.Explain /root/testdata/sf0.001 /tmp/plans"`
+  * Env: SPARK_GRAFT_CPUS (default 4) — the bench session's shape, so
+  * the dumps show the plans the bench runs.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("/tmp/graft_plans")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

@@ -54,7 +54,10 @@ object GraftSession {
         if (wide) 8 * shufflePartitions else shufflePartitions
     }
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** The one session factory: every main and spec builds through it.
+    * `dataDir` sizes AQE's starting width ([[initialPartitionNum]]). */
+  def builder(master: String = "local[*]", shufflePartitions: Int = 32,
+      dataDir: String = ""): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -62,7 +65,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        initialPartitionNum(shufflePartitions).toString)
+        initialPartitionNum(shufflePartitions, dataDir).toString)
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       // parquet TIMESTAMP(NANOS) is otherwise rejected outright; with
       // this flag it reads as a raw long, which Tables.normalizeNanos

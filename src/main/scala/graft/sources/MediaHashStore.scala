@@ -1,8 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,16 +11,14 @@ import org.apache.spark.sql.functions._
   * store that index was append-only: a right-to-be-forgotten deletion
   * forced a full rebuild — and rebuilds in the media tier re-run the
   * DECODE, the one cost the index exists to amortize. Day partitions
-  * give the same algebra as [[SignatureStore]]/[[WinnowStore]]:
-  * [[advanceDay]] hashes only its own batch, [[retireDay]] drops a
-  * day's partition and XORs its digest back out of the meta, and
-  * neither ever re-reads another day's binary payloads.
+  * put it on the [[StoreKernel]] contract (day-keyed): [[advanceDay]]
+  * hashes only its own batch, [[retireDay]] drops one day, and neither
+  * ever re-reads another day's binary payloads.
   *
-  * The store holds the HASHED relation, not payloads — hashing
-  * (decode, [[graft.multimodal.MediaDedup.hashImages]]) happens once
-  * at ingest, so the per-day digest is over (media_id, dhash): exact
-  * under union/difference of disjoint day batches, verifiable without
-  * touching a single image byte.
+  * The store holds the HASHED relation — decoding happens once at
+  * ingest — so the per-day digest is over the stored (media_id, dhash)
+  * rows, read back from the just-written partition (a re-decoded batch
+  * plan must not be trusted to reproduce its bytes).
   *
   * Layout under one root:
   * {{{
@@ -32,17 +27,12 @@ import org.apache.spark.sql.functions._
   *   <dir>/source_meta/   (day, n_src, digest)   sourced face only
   * }}}
   *
-  * '''The SOURCED face (r15).''' The decon probe (q197) is offered the
-  * train corpus's SOURCE relation, not its hashes — so a store-or-
-  * inline dispatch needs freshness the caller can verify WITHOUT the
-  * decode the store exists to amortize. [[buildSourced]]/
-  * [[advanceDaySourced]] persist, per day, a digest over the source
-  * rows the day's hashes were derived from; [[openFreshFor]] then
-  * verifies the offered source in one xxhash64 scan (no render, no
-  * decode) and serves the stored index. The source meta is the LAST
-  * write — the sourced face's commit point — so a crashed advance
-  * leaves its day invisible to [[openFreshFor]] (live-meta rule) and
-  * the replay's retire-then-rewrite converges.
+  * '''The SOURCED face.''' The decon probe (q197) is offered the train
+  * corpus's SOURCE relation, so [[buildSourced]]/[[advanceDaySourced]]
+  * also commit, per day, a digest of the (media_id, text) rows the
+  * hashes derive from; [[openFreshFor]] verifies the offered source in
+  * one xxhash64 scan (no decode). The source meta is the sourced face's
+  * commit point — written last, retired first.
   */
 object MediaHashStore {
 
@@ -78,8 +68,8 @@ object MediaHashStore {
     * runs. Default false: verify freshness even when trusted. */
   val TrustFreshKey = "spark.graft.mediastore.trustfresh"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val face = StoreKernel.DayFace("mediastore", "meta", "n_media", Seq("hashes"))
+  private val sourced = StoreKernel.DayFace("mediastore", "source_meta", "n_src", Nil)
 
   /** Order-independent digest of a hashed batch:
     * (count, XOR of xxhash64(media_id, dhash)) — [[FileDigests]]-cached
@@ -94,75 +84,31 @@ object MediaHashStore {
     FileDigests.digestOfPinned(hashed, xxhash64(col("media_id"), col("dhash")))
 
   private def writeDay(spark: SparkSession, dir: String, day: Int,
-      hashedBatch: DataFrame, mode: String): Unit = {
-    hashedBatch.select("media_id", "dhash").withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/hashes")
-    // Meta lands LAST — the commit point; a torn day isn't covered by
-    // the digest, so a replay's retire-then-rewrite converges. The
-    // digest is computed from the JUST-WRITTEN partition, not from
-    // `hashedBatch` again: a non-deterministic batch plan (sampled,
-    // raced, or re-decoded input) evaluated twice could persist a meta
-    // digest that never matches the stored rows, turning the store
-    // permanently "torn" with no recovery besides a rebuild. Reading
-    // back what parquet holds makes the digest provably cover the
-    // stored bytes. An EMPTY day writes no partition directory at all
-    // (the sibling stores' empty-ingest-day rule, review r15): its meta
-    // row records (0, 0) — a zero XOR contribution — instead of the
-    // read-back crashing on the absent path.
-    val dayPath = new Path(s"$dir/hashes/day=$day")
-    val (n, dg) =
-      if (fs(spark, dir).exists(dayPath))
-        digestOf(spark.read.parquet(dayPath.toString))
-      else (0L, 0L)
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_media", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
+      hashedBatch: DataFrame): Unit = {
+    face.write(hashedBatch.select("media_id", "dhash"), dir, "hashes", day)
+    face.commit(spark, dir, day, face.writtenDigest(spark, dir, "hashes", day, digestOf))
   }
 
   /** Build a fresh store from an already-hashed (media_id, dhash)
     * relation, replacing any prior content. */
   def build(hashed: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = hashed.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, hashed, "errorifexists")
+    StoreKernel.replace(hashed.sparkSession, dir)
+    writeDay(hashed.sparkSession, dir, day, hashed)
   }
 
-  /** Append one ingest day of hashes. Idempotent per day (existing
-    * `day=N` content is retired first), so at-least-once replay
-    * converges. */
+  /** Append one ingest day of hashes. Idempotent per day. */
   def advanceDay(hashedBatch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = hashedBatch.sparkSession
-    // Unconditional retire (ADVICE r13): a crashed build leaves
-    // hashes/day=N without a meta — a meta-guarded retire would append
-    // into that orphan and double its rows.
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, hashedBatch, "append")
+    retireDay(hashedBatch.sparkSession, dir, day)
+    writeDay(hashedBatch.sparkSession, dir, day, hashedBatch)
   }
 
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest out of BOTH metas. After this [[open]]/[[openFreshFor]]
-    * serve the index exactly as if that day had never been ingested —
-    * no decode, no rebuild. Safe on a torn store (no meta ⇒ partition
-    * drop only). */
+  /** Retire one day (takedown/expiry) out of BOTH metas — the source
+    * meta first — then drop its partition. After this [[open]]/
+    * [[openFreshFor]] serve the index exactly as if that day had never
+    * been ingested — no decode, no rebuild. */
   def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/hashes/day=$day"), true): Unit
-    if (f.exists(new Path(s"$dir/source_meta"))) {
-      val keptS = spark.read.parquet(s"$dir/source_meta")
-        .where(col("day") =!= day).collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-      spark.createDataFrame(keptS).toDF("day", "n_src", "digest")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/source_meta")
-    }
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_media", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
+    sourced.dropMeta(spark, dir, day)
+    face.retire(spark, dir, day)
   }
 
   // -------------------------------------------- sourced decon face
@@ -177,144 +123,62 @@ object MediaHashStore {
     FileDigests.digestOf(source, xxhash64(col("media_id"), col("text")))
 
   private def writeSourceMeta(spark: SparkSession, dir: String, day: Int,
-      source: DataFrame, mode: String): Unit = {
-    // Write path: whole-relation aggregate (never the per-file cache)
-    // so the committed digest describes the evaluation the day's hashes
-    // derived from — FileDigests.digestOfPinned's tear argument.
-    val (n, dg) =
-      FileDigests.digestOfPinned(source, xxhash64(col("media_id"), col("text")))
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_src", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/source_meta")
-  }
+      source: DataFrame): Unit =
+    sourced.commit(spark, dir, day,
+      FileDigests.digestOfPinned(source, xxhash64(col("media_id"), col("text"))))
 
   /** Build a fresh SOURCED store: the hash index plus the day's source
-    * digest, so [[openFreshFor]] can verify freshness against the
-    * offered source relation without a single decode. `source` must be
-    * the exact (media_id, text) relation `hashed` was derived from.
-    *
-    * `day` defaults to -1 — OUTSIDE a Structured Streaming batch-id
-    * range — matching [[graft.streaming.MediaHashMaintainer]]'s
-    * documented backfill convention (ADVICE r15): a default-day-0
-    * backfill would collide with the stream's first batch, whose
-    * unconditional retire-then-write silently DELETES the backfill's
-    * hashes from the serving index. Builds that are not followed by a
-    * maintainer may pass any day. */
+    * digest. `source` must be the exact (media_id, text) relation
+    * `hashed` was derived from. `day` defaults to -1 — outside a
+    * Structured Streaming batch-id range — so the first batch of
+    * [[graft.streaming.MediaHashMaintainer]] cannot retire the backfill. */
   def buildSourced(source: DataFrame, hashed: DataFrame, dir: String,
       day: Int = -1): Unit = {
     val spark = hashed.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, hashed, "errorifexists")
-    // Source meta lands LAST — the sourced face's commit point.
-    writeSourceMeta(spark, dir, day, source, "errorifexists")
+    StoreKernel.replace(spark, dir)
+    writeDay(spark, dir, day, hashed)
+    writeSourceMeta(spark, dir, day, source)
   }
 
-  /** Append one ingest day with its source digest. Idempotent per day
-    * (unconditional retire-then-write, source meta last). */
+  /** Append one ingest day with its source digest. Idempotent per day. */
   def advanceDaySourced(source: DataFrame, hashedBatch: DataFrame,
       dir: String, day: Int): Unit = {
     val spark = hashedBatch.sparkSession
     retireDay(spark, dir, day)
-    writeDay(spark, dir, day, hashedBatch, "append")
-    writeSourceMeta(spark, dir, day, source, "append")
+    writeDay(spark, dir, day, hashedBatch)
+    writeSourceMeta(spark, dir, day, source)
   }
 
   /** The stored hash index IF [[DirKey]] is configured and the store
-    * is FRESH for the offered (media_id, text) source — the q82/q195
-    * store-or-inline dispatch for the media decon eye (q197).
-    * Freshness: the XOR-composed per-day source digests must equal the
-    * offered source's (one caption hash pass, zero decodes). Only days
-    * named in the source meta are read (it is the last write of every
-    * build/advance, so a crashed advance's orphan day is invisible
-    * here). Untrusted opens additionally verify the served hash rows
-    * against the hash meta — an integrity scan of 16-byte rows, still
-    * no decode; [[TrustKey]] skips only that integrity scan, and the
-    * freshness comparison needs [[TrustFreshKey]] too. None (a driver-log
-    * line, never an error) on key unset, unreadable store, or any
-    * mismatch — the fallback costs an inline re-decode, never a wrong
-    * or missing pair. */
+    * is FRESH for the offered (media_id, text) source — the q197
+    * store-or-inline dispatch. Only days the source meta names are
+    * read. Untrusted opens also verify the served hash rows against
+    * the hash meta (16-byte rows, still no decode); [[TrustKey]] skips
+    * only that integrity scan, the freshness comparison needs
+    * [[TrustFreshKey]]. */
   def openFreshFor(source: DataFrame): Option[DataFrame] = {
     val spark = source.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
-      val rows = spark.read.parquet(s"$dir/source_meta").collect()
-        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      // Freshness runs under its OWN lever (ADVICE r15): TrustKey skips
-      // only the integrity scan below. The caption-digest comparison is
-      // decode-free and is the sole signal that demotes a lagging
-      // ingest to inline instead of silently missing pairs.
-      if (!spark.conf.get(TrustFreshKey, "false").toBoolean) {
-        val composed = (rows.map(_._2).sum, rows.map(_._3).foldLeft(0L)(_ ^ _))
-        if (sourceDigestOf(source) != composed) {
-          System.err.println(s"[mediastore] $dir is stale for this source — hashing inline")
-          return None
+    StoreKernel.open(spark, DirKey, face.tag) { dir =>
+      sourced.fresh(spark, dir, StoreKernel.trusted(spark, TrustFreshKey),
+        sourceDigestOf(source)).map { m =>
+        val idx = face.read(spark, dir, "hashes", m.live)(
+          StoreKernel.empty(spark, "media_id BIGINT, dhash BIGINT")).select("media_id", "dhash")
+        if (m.live.nonEmpty && !StoreKernel.trusted(spark, TrustKey)) {
+          val hashMeta = StoreKernel.Meta(face.meta(spark, dir).rows.filter(r => m.live.contains(r._1)))
+          require(digestOf(idx) == hashMeta.digest,
+            s"media hash store $dir is torn: partition digest != meta digest")
         }
+        idx
       }
-      val live = rows.filter(_._2 > 0L)
-      if (live.isEmpty) {
-        import spark.implicits._
-        return Some(Seq.empty[(Long, Long)].toDF("media_id", "dhash"))
-      }
-      val idx = spark.read.parquet(live.map(d => s"$dir/hashes/day=${d._1}"): _*)
-        .select("media_id", "dhash")
-      if (!trusted) {
-        val hm = spark.read.parquet(s"$dir/meta")
-          .where(col("day").isin(live.map(_._1): _*))
-          .agg(coalesce(sum("n_media"), lit(0L)),
-            coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-        require(digestOf(idx) == ((hm.getLong(0), hm.getLong(1))),
-          s"media hash store $dir is torn: partition digest != meta digest")
-      }
-      Some(idx)
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[mediastore] $dir unusable (${e.getMessage}) — hashing inline")
-        None
     }
   }
 
-  /** The stored index across all live days, verified self-consistent
-    * unless [[TrustKey]] is set: the partitions' digest must equal the
-    * meta's composed digest — a torn write or external tampering
-    * surfaces here instead of as silently missing candidates. The
-    * verify face is the audit path; trusted deployments (external
-    * checksums, immutable object store) skip the full-index scan.
-    *
-    * Retiring the LAST live day is a legal state (a total takedown):
-    * the meta then sums to zero media and the index is served as an
-    * empty (media_id, dhash) relation — not as Spark's
-    * unable-to-infer-schema error on the empty `hashes/` dir. */
-  def open(spark: SparkSession, dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta")
-      .agg(coalesce(sum("n_media"), lit(0L)),
-        coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-    val stored = (m.getLong(0), m.getLong(1))
-    if (stored._1 == 0L) {
-      // The zero-meta branch is itself a torn-store hazard (ADVICE r12):
-      // if every prior day was retired and an advanceDay crashed after
-      // writing hashes/day=N but before its meta row, hashes/ is
-      // non-empty while the meta sums to zero — serving the empty index
-      // would silently drop dedup candidates. Unless trusted, verify
-      // hashes/ really is absent/empty before serving empty.
-      if (!spark.conf.get(TrustKey, "false").toBoolean) {
-        val f = fs(spark, dir)
-        val hashesPath = new Path(s"$dir/hashes")
-        val orphans = f.exists(hashesPath) &&
-          f.listStatus(hashesPath).exists(_.getPath.getName.startsWith("day="))
-        require(!orphans,
-          s"media hash store $dir is torn: hashes/ has day partitions but the meta sums to zero")
-      }
-      import spark.implicits._
-      return Seq.empty[(Long, Long)].toDF("media_id", "dhash")
-    }
-    val idx = spark.read.parquet(s"$dir/hashes").select("media_id", "dhash")
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (!trusted)
-      require(digestOf(idx) == stored,
-        s"media hash store $dir is torn: partition digest != meta digest $stored")
-    idx
-  }
+  /** The stored index across all live days — the kernel's audit read:
+    * the partitions must digest to the meta unless [[TrustKey]] is set,
+    * so a torn write surfaces here instead of as missing candidates.
+    * Retiring the LAST live day serves an empty relation. */
+  def open(spark: SparkSession, dir: String): DataFrame =
+    face.audited(spark, dir, "hashes", Seq("media_id", "dhash"),
+      StoreKernel.trusted(spark, TrustKey), digestOf)(
+      StoreKernel.empty(spark, "media_id BIGINT, dhash BIGINT"))
 }

@@ -85,9 +85,6 @@ object StoreLease {
 
   private val held = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
   private def leaseDir(dir: String) = new Path(s"$dir/_lease")
 
   /** Loud guard on the protocol's one load-bearing filesystem
@@ -116,7 +113,7 @@ object StoreLease {
     }
 
   private def maxEpoch(spark: SparkSession, dir: String): Long = {
-    val f = fs(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
     val d = leaseDir(dir)
     if (!f.exists(d)) 0L
     else f.listStatus(d).iterator
@@ -135,7 +132,7 @@ object StoreLease {
     * would mint epochs forever), and after [[MaxAcquireAttempts]]
     * lost races (a pathological stampede, not a deployment). */
   def acquire(spark: SparkSession, dir: String, owner: String = ""): Long = {
-    val f = fs(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
     // toBooleanOption: a malformed opt-in value must read as "not
     // opted in" (the safe direction), not crash every acquire
     requireAtomicCreate(
@@ -180,7 +177,7 @@ object StoreLease {
     * releases — the next owner fences it via [[acquire]]. */
   def release(spark: SparkSession, dir: String): Unit =
     Option(held.remove(dir)).foreach { e =>
-      fs(spark, dir).delete(new Path(leaseDir(dir), f"epoch-$e%020d"), false): Unit
+      StoreKernel.fs(spark, dir).delete(new Path(leaseDir(dir), f"epoch-$e%020d"), false): Unit
     }
 
   /** Commit-point check, called by the stores' write paths. Loud on
@@ -210,7 +207,7 @@ object StoreLease {
     * takeover landing mid-delete fences this builder before it starts
     * writing replacement content over the new owner's. */
   def replaceContents(spark: SparkSession, dir: String): Unit = {
-    val f = fs(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
     val p = new Path(dir)
     if (f.exists(p))
       f.listStatus(p).filterNot(_.getPath.getName == "_lease")

@@ -4,7 +4,6 @@ import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.operators.{BpeQueries, UnigramQueries, WordPieceQueries}
 
@@ -31,17 +30,13 @@ import graft.operators.{BpeQueries, UnigramQueries, WordPieceQueries}
   *   <dir>/meta/        (n_docs, digest)           commit point, lands LAST
   * }}}
   *
-  * Freshness is the same corpus digest as the signature store —
-  * `(count, XOR of xxhash64(doc_id, text))`, recomputed on open with
-  * one narrow scan and compared exactly. A tokenizer trained on a
-  * different corpus is silently the WRONG tokenizer (its vocabulary
-  * reflects another distribution), so a mismatch falls back to inline
-  * training rather than serving stale pieces; [[TrustKey]] skips the
-  * scan for deployments with external freshness guarantees. Unlike the
-  * signature store there is NO day-partitioned maintenance face:
+  * Freshness is the [[StoreKernel]] contract with a single, keyless
+  * meta row over `(doc_id, text)`: a tokenizer trained on a different
+  * corpus is silently the WRONG tokenizer, so a mismatch falls back to
+  * inline training. There is NO day-partitioned maintenance face:
   * tokenizer training is global (a merge's rank depends on every
-  * document), so the store retrains wholesale per corpus snapshot —
-  * the economics a real pipeline runs (train weekly, encode daily).
+  * document), so the store retrains wholesale per corpus snapshot
+  * (train weekly, encode daily).
   *
   * Reference analog: none — the reference has no tokenizer tier; this
   * closes VERDICT r10's missing item 1.
@@ -53,9 +48,6 @@ object TokenizerStore {
 
   /** Session conf: skip the digest freshness scan and trust the store. */
   val TrustKey = "spark.graft.tokstore.trust"
-
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** One freshness verdict per (session, store dir, corpus PLAN) —
     * q166's bake-off opens four artifacts and previously digested the
@@ -82,7 +74,7 @@ object TokenizerStore {
     * mtime forms a new key and verification runs fresh). */
   private def verdictKey(docRel: DataFrame, dir: String): (String, String, Int, Long) = {
     val metaMtime = try
-      fs(docRel.sparkSession, dir)
+      StoreKernel.fs(docRel.sparkSession, dir)
         .getFileStatus(new Path(s"$dir/meta")).getModificationTime
     catch { case NonFatal(_) => -1L }
     (String.valueOf(System.identityHashCode(docRel.sparkSession)), dir,
@@ -99,8 +91,7 @@ object TokenizerStore {
   def build(docRel: DataFrame, dir: String): Unit = {
     val spark = docRel.sparkSession
     import spark.implicits._
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
+    StoreKernel.replace(spark, dir)
     BpeQueries.bpeMergesOn(docRel)
       .coalesce(1).write.parquet(s"$dir/bpe")
     BpeQueries.byteBpeMergesOn(docRel)
@@ -111,10 +102,8 @@ object TokenizerStore {
       .coalesce(1).write.parquet(s"$dir/wordpiece")
     WordPieceQueries.alphabetOf(docRel).toSeq.sorted.toDF("ch")
       .coalesce(1).write.parquet(s"$dir/wp_alphabet")
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    val (n, dg) = SignatureStore.digestOfPinned(docRel) // write path: aggregate, never the cache
-    Seq((n, dg)).toDF("n_docs", "digest")
-      .coalesce(1).write.parquet(s"$dir/meta")
+    StoreKernel.commitRow(spark, dir, s"$dir/meta",
+      Seq(SignatureStore.digestOfPinned(docRel)).toDF("n_docs", "digest"))
     invalidate(dir) // a rebuilt store must re-verify, not serve old verdicts
   }
 
@@ -128,18 +117,15 @@ object TokenizerStore {
     val spark = docRel.sparkSession
     val dir = spark.conf.get(DirKey, "")
     if (dir.isEmpty) return None
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (trusted) {
+    if (StoreKernel.trusted(spark, TrustKey)) {
       // Deployment-level freshness guarantee: skip the corpus digest
       // (and the verdict cache — a later un-trusted open must verify,
       // not inherit a trust-mode pass), but keep the unreadable-store
       // fallback contract: a torn store costs inline training, never
       // an error.
-      return try { spark.read.parquet(s"$dir/meta").head(): Unit; Some(dir) }
-      catch {
-        case NonFatal(e) =>
-          System.err.println(s"[tokstore] $dir unreadable (${e.getMessage}) — retraining inline")
-          None
+      return StoreKernel.open(spark, DirKey, "tokstore") { dir =>
+        spark.read.parquet(s"$dir/meta").head(): Unit
+        Some(dir)
       }
     }
     val fresh = verdicts.computeIfAbsent(verdictKey(docRel, dir), _ =>
@@ -147,12 +133,11 @@ object TokenizerStore {
         val m = spark.read.parquet(s"$dir/meta").head()
         digestScans.incrementAndGet(): Unit
         val ok = SignatureStore.digestOf(docRel) == (m.getLong(0), m.getLong(1))
-        if (!ok)
-          System.err.println(s"[tokstore] $dir is stale for this corpus — retraining inline")
+        if (!ok) StoreKernel.fallback("tokstore", dir, "is stale for the offered corpus")
         ok
       } catch {
         case NonFatal(e) =>
-          System.err.println(s"[tokstore] $dir unreadable (${e.getMessage}) — retraining inline")
+          StoreKernel.fallback("tokstore", dir, s"unreadable (${e.getMessage})")
           false
       })
     if (fresh) Some(dir) else None

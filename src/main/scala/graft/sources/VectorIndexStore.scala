@@ -1,9 +1,7 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Day-partitioned store for the IVF vector index — the
@@ -29,13 +27,14 @@ import org.apache.spark.sql.functions._
   * quantizer, the standard IVF operational contract (retraining the
   * quantizer = a new index = [[build]]).
   *
-  * Freshness covers BOTH halves: per-day digests over the indexed
-  * vectors `(count, XOR of xxhash64(vec_id, embedding))` XOR-compose
-  * on read and must match the offered index relation; and the stored
-  * codebook must equal the codebook the offered corpus implies (a K-row
-  * driver comparison — both sides are the same deterministic
-  * derivation, so equality is exact, not approximate). A stale store
-  * costs an inline re-assignment, never a wrong neighbor.
+  * Freshness covers BOTH halves: the per-day digests over the indexed
+  * vectors `(count, XOR of xxhash64(vec_id, embedding))` follow the
+  * [[StoreKernel]] contract (day-keyed; base and PQ faces share `meta`,
+  * the scaled faces keep `meta_scaled`/`meta_pqs`), and the stored
+  * codebook must equal the one the offered corpus implies — a K-row
+  * driver comparison, or for the scaled faces the build-time corpus
+  * digest in `codebook_meta_*`. A stale store costs an inline
+  * re-assignment, never a wrong neighbor.
   */
 object VectorIndexStore {
 
@@ -52,27 +51,11 @@ object VectorIndexStore {
   private[graft] val lastPqBuildReusedCodes =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val face = StoreKernel.DayFace("vectorstore", "meta", "n_vecs", Seq("assign", "codes"))
+  private val scaled = StoreKernel.DayFace("vectorstore", "meta_scaled", "n_vecs", Seq("assign_scaled"))
+  private val pqScaled = StoreKernel.DayFace("vectorstore", "meta_pqs", "n_vecs", Seq("codes_pqs"))
 
-  /** The meta rows (day, n, digest) and their composed (Σn, XOR)
-    * digest — collected to the driver (one row per day, bounded).
-    * Open faces read ONLY `day=` partitions named here: a crashed
-    * advance (partition written, meta row not) leaves an orphan day
-    * the digest no longer covers, and reading the whole directory
-    * would silently serve those extra rows past a digest check made
-    * against the pre-advance meta (ADVICE r13 — the
-    * SemanticDeconStore live-meta orphan rule, applied to all three
-    * faces here). */
-  private def liveMeta(spark: SparkSession,
-      metaPath: String): (Seq[(Int, Long, Long)], (Long, Long)) = {
-    val rows = spark.read.parquet(metaPath).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    // Zero-row days hold no data and XOR a zero digest — skip them so
-    // a day whose empty write produced no partition dir stays readable.
-    (rows.filter(_._2 > 0L),
-      (rows.map(_._2).sum, rows.map(_._3).foldLeft(0L)(_ ^ _)))
-  }
+  private val sq = graft.operators.SimilarityQueries
 
   /** Corpus digest over an embedding relation (vec_id, embedding) —
     * the [[SignatureStore.digestOf]] shape for the vector tier.
@@ -87,22 +70,55 @@ object VectorIndexStore {
   def digestOfPinned(e: DataFrame): (Long, Long) =
     FileDigests.digestOfPinned(e, xxhash64(col("vec_id"), col("embedding")))
 
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      batch: DataFrame, cents: Seq[(Long, Seq[Double])], mode: String): Unit = {
-    // Pinned across assignment write + digest (the WinnowStore.writeDay
-    // argument): a non-deterministic batch plan must not persist a
-    // digest that doesn't cover the assigned rows.
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.ivfAssign(pinned, cents)
-        .withColumn("day", lit(day))
-        .write.mode(mode).partitionBy("day").parquet(s"$dir/assign")
-      // Meta lands LAST — the commit point.
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
+  /** Write `derive(batch)` as `day` of `f`'s `payload` and commit the
+    * batch digest, the batch pinned across both. */
+  private def writeDay(f: StoreKernel.DayFace, payload: String, dir: String, day: Int,
+      batch: DataFrame)(derive: DataFrame => DataFrame): Unit =
+    StoreKernel.pinned(batch) { b =>
+      f.write(derive(b), dir, payload, day)
+      f.commit(b.sparkSession, dir, day, digestOfPinned(b))
+    }
+
+  private def codebookAt(spark: SparkSession, path: String): Seq[(Long, Seq[Double])] =
+    spark.read.parquet(path)
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+
+  private def writeCodebook(spark: SparkSession, path: String,
+      cents: Seq[(Long, Seq[Double])]): Unit =
+    spark.createDataFrame(cents).toDF("c_id", "cv").coalesce(1).write.parquet(path)
+
+  /** Freeze the coarse codebook of a decon store at `<dir>/codebook`:
+    * k-means over `src` when `trained`, else its first K vectors. */
+  private[sources] def freezeCodebook(src: DataFrame, dir: String, trained: Boolean,
+      what: String): Seq[(Long, Seq[Double])] = {
+    val cents =
+      if (trained) sq.trainedCodebook(src, sq.NumCentroids) else sq.centroidList(src)
+    require(cents.nonEmpty,
+      s"$what $dir: codebook source has no vec_id below the codebook size")
+    writeCodebook(src.sparkSession, s"$dir/codebook", cents)
+    cents
+  }
+
+  private def writePqCodebook(spark: SparkSession, path: String,
+      cents: Map[Int, Seq[(Long, Seq[Double])]]): Unit = {
+    import spark.implicits._
+    cents.toSeq.flatMap { case (sub, cs) => cs.map { case (cid, cv) => (sub, cid, cv) } }
+      .toDF("sub", "cid", "cv").coalesce(1).write.parquet(path)
+  }
+
+  /** A scaled face's build-time corpus digest — the codebook's
+    * freshness artifact, verified on open instead of retraining. */
+  private def commitCodebookMeta(spark: SparkSession, dir: String, path: String,
+      corpus: DataFrame, trained: Boolean): Unit = {
+    val (n, dg) = digestOfPinned(corpus)
+    StoreKernel.commitRow(spark, dir, path,
+      spark.createDataFrame(Seq((n, dg, trained))).toDF("n_vecs", "digest", "trained"))
+  }
+
+  private def clear(spark: SparkSession, dir: String, subs: Seq[String]): Unit = {
+    StoreLease.checkWrite(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
+    subs.foreach(p => f.delete(new Path(s"$dir/$p"), true): Unit)
   }
 
   /** Build a fresh index at `dir`: train (collect) the codebook from
@@ -110,76 +126,48 @@ object VectorIndexStore {
   def build(corpus: DataFrame, indexRel: DataFrame, dir: String,
       day: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    val cents = graft.operators.SimilarityQueries.centroidList(corpus)
-    spark.createDataFrame(cents).toDF("c_id", "cv")
-      .coalesce(1).write.parquet(s"$dir/codebook")
-    writeDay(spark, dir, day, indexRel, cents, "errorifexists")
+    StoreKernel.replace(spark, dir)
+    val cents = sq.centroidList(corpus)
+    writeCodebook(spark, s"$dir/codebook", cents)
+    writeDay(face, "assign", dir, day, indexRel)(sq.ivfAssign(_, cents))
   }
 
   /** The stored codebook — K driver rows. */
   def storedCodebook(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(s"$dir/codebook")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    codebookAt(spark, s"$dir/codebook")
 
   /** Append one ingest day: assign ONLY the batch against the STORED
-    * codebook (never re-derived — the frozen-quantizer contract), XOR
-    * its digest into the meta. Idempotent per day (existing `day=N`
-    * content is retired first), so at-least-once replay converges. */
+    * codebook (never re-derived — the frozen-quantizer contract).
+    * Idempotent per day. */
   def advanceDay(batch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = batch.sparkSession
-    val cents = storedCodebook(spark, dir)
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, batch, cents, "append")
+    val cents = storedCodebook(batch.sparkSession, dir)
+    retireDay(batch.sparkSession, dir, day)
+    writeDay(face, "assign", dir, day, batch)(sq.ivfAssign(_, cents))
   }
 
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest back out of the meta. The codebook stays — it is a model
-    * artifact, not data derived from the retired day. */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/assign/day=$day"), true): Unit
-    f.delete(new Path(s"$dir/codes/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** Retire one day (takedown/expiry) of the base and PQ faces. The
+    * codebook stays — it is a model artifact, not data derived from
+    * the retired day. */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    face.retire(spark, dir, day)
 
   // ------------------------------------------------------ PQ face
   /** Build the COMPRESSED index (IVF-PQ): coarse codebook + per-
     * subspace PQ codebooks (both frozen model artifacts, driver rows)
-    * + the coded corpus (vec_id, bkt, sub, code) as `day`. This is
-    * the artifact whose derivation is expensive at production shapes
-    * (a k-means training pass + a full encode per run); q82/q88 read
-    * it instead when configured and fresh. */
+    * + the coded corpus (vec_id, bkt, sub, code) as `day` — the
+    * artifact whose derivation is expensive at production shapes (a
+    * k-means training pass + a full encode per run); q82/q88 read it
+    * instead when configured and fresh. */
   def buildPq(corpus: DataFrame, dir: String, day: Int = 0): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    val pinned = corpus.persist()
-    try {
-      val (coarse, cents, codes) =
-        graft.operators.SimilarityQueries.pqIndexArtifacts(pinned)
-      spark.createDataFrame(coarse).toDF("c_id", "cv")
-        .coalesce(1).write.parquet(s"$dir/codebook")
-      cents.toSeq.flatMap { case (sub, cs) =>
-        cs.map { case (cid, cv) => (sub, cid, cv) }
-      }.toDF("sub", "cid", "cv")
-        .coalesce(1).write.parquet(s"$dir/pq_codebook")
-      codes.withColumn("day", lit(day))
-        .write.partitionBy("day").parquet(s"$dir/codes")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
+    StoreKernel.replace(spark, dir)
+    StoreKernel.pinned(corpus) { c =>
+      val (coarse, cents, codes) = sq.pqIndexArtifacts(c)
+      writeCodebook(spark, s"$dir/codebook", coarse)
+      writePqCodebook(spark, s"$dir/pq_codebook", cents)
+      face.write(codes, dir, "codes", day)
+      face.commit(spark, dir, day, digestOfPinned(c))
+    }
   }
 
   /** The stored PQ codebooks — m × k' driver rows. */
@@ -188,60 +176,35 @@ object VectorIndexStore {
     storedPqCodebookAt(spark, s"$dir/pq_codebook")
 
   /** Append one day of PQ codes, encoded against BOTH frozen
-    * codebooks. Idempotent per day (retire-then-rewrite). */
+    * codebooks. Idempotent per day. */
   def advanceDayPq(batch: DataFrame, dir: String, day: Int): Unit = {
     val spark = batch.sparkSession
     val coarse = storedCodebook(spark, dir)
     val cents = storedPqCodebook(spark, dir)
     retireDay(spark, dir, day)
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.pqEncodeWith(pinned, coarse, cents)
-        .withColumn("day", lit(day))
-        .write.mode("append").partitionBy("day").parquet(s"$dir/codes")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode("append").parquet(s"$dir/meta")
-    } finally pinned.unpersist(blocking = false): Unit
+    writeDay(face, "codes", dir, day, batch)(sq.pqEncodeWith(_, coarse, cents))
   }
 
   /** The stored (coarse codebook, PQ codebooks, codes) IF configured
     * and the day digests compose to this exact corpus — None on key
     * unset, unreadable store, coarse-codebook drift, or digest
-    * mismatch. Same freshness contract as [[openFresh]]: the digest
-    * covers every input row of the deterministic derivation, so a
-    * match means retraining would reproduce the stored artifacts. */
+    * mismatch. */
   def openFreshPq(corpus: DataFrame)
       : Option[(Seq[(Long, Seq[Double])], Map[Int, Seq[(Long, Seq[Double])]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    StoreKernel.open(spark, DirKey, face.tag) { dir =>
       val coarse = storedCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted &&
-        graft.operators.SimilarityQueries.centroidList(corpus) != coarse) {
-        System.err.println(s"[vectorstore] $dir codebook differs from this corpus's — deriving inline")
-        return None
+      val trusted = StoreKernel.trusted(spark, TrustKey)
+      if (!trusted && sq.centroidList(corpus) != coarse)
+        StoreKernel.fallback(face.tag, dir, "codebook differs from the offered corpus's")
+      else face.fresh(spark, dir, trusted, digestOf(corpus)).map { m =>
+        (coarse, storedPqCodebook(spark, dir), face.read(spark, dir, "codes", m.live)(
+          StoreKernel.empty(spark, CodesDdl)).select("vec_id", "bkt", "sub", "code"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta")
-      if (!trusted && digestOf(corpus) != stored) {
-        System.err.println(s"[vectorstore] $dir is stale for this corpus — deriving inline")
-        None
-      } else if (days.isEmpty) {
-        Some((coarse, storedPqCodebook(spark, dir),
-          spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
-            col("id").cast("int").as("sub"), col("id").as("code"))))
-      } else Some((coarse, storedPqCodebook(spark, dir),
-        spark.read.parquet(days.map(d => s"$dir/codes/day=${d._1}"): _*)
-          .select("vec_id", "bkt", "sub", "code")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir unreadable (${e.getMessage}) — deriving inline")
-        None
     }
   }
+
+  private val CodesDdl = "vec_id BIGINT, bkt BIGINT, sub INT, code BIGINT"
 
   // ------------------------------------------- scaled-K face (r13)
   /** Build the DATA-SCALED index face: the q188 shape — a FROZEN
@@ -266,129 +229,61 @@ object VectorIndexStore {
   def buildScaled(corpus: DataFrame, indexRel: DataFrame, dir: String,
       day: Int = 0, trained: Boolean = true): Unit = {
     val spark = corpus.sparkSession
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/codebook_scaled"), true): Unit
-    f.delete(new Path(s"$dir/codebook_meta_scaled"), true): Unit
-    f.delete(new Path(s"$dir/assign_scaled"), true): Unit
-    f.delete(new Path(s"$dir/meta_scaled"), true): Unit
+    clear(spark, dir, Seq("codebook_scaled", "codebook_meta_scaled", "assign_scaled", "meta_scaled"))
     // Pinned: the codebook meta's digest must cover exactly the rows
     // the codebook was derived from.
-    val pinned = corpus.persist()
-    try {
-      val k = graft.operators.SimilarityQueries.scaledK(pinned)
-      val cents =
-        if (trained)
-          graft.operators.SimilarityQueries.scaledCodebookTrained(pinned, k)
-        else graft.operators.SimilarityQueries.scaledCodebook(pinned, k)
-      spark.createDataFrame(cents.zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
-        .toDF("c_id", "cv")
-        .coalesce(1).write.parquet(s"$dir/codebook_scaled")
-      // Codebook freshness artifact: (corpus count, corpus digest,
-      // trained?) — [[openFreshScaled]] verifies the OFFERED corpus
-      // digests to this instead of re-deriving the codebook, which for
-      // a trained codebook would mean re-running the training job on
-      // every open (and for first-K was a collect of the same cost
-      // class anyway). A grown/mutated corpus digests differently →
-      // stale → the Faiss retrain event, same contract as before.
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((n, dg, trained)))
-        .toDF("n_vecs", "digest", "trained")
-        .coalesce(1).write.parquet(s"$dir/codebook_meta_scaled")
-      writeDayScaled(spark, dir, day, indexRel, cents, "errorifexists")
-    } finally pinned.unpersist(blocking = false): Unit
+    StoreKernel.pinned(corpus) { c =>
+      val k = sq.scaledK(c)
+      val cents = if (trained) sq.scaledCodebookTrained(c, k) else sq.scaledCodebook(c, k)
+      writeCodebook(spark, s"$dir/codebook_scaled",
+        cents.zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
+      commitCodebookMeta(spark, dir, s"$dir/codebook_meta_scaled", c, trained)
+      writeDay(scaled, "assign_scaled", dir, day, indexRel)(sq.scaledAssign(_, cents))
+    }
   }
 
   /** The stored scaled codebook — ⌈√N⌉ driver rows, index-ordered. */
   def storedScaledCodebook(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$dir/codebook_scaled")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1).map(_._2).toSeq
+    codebookAt(spark, s"$dir/codebook_scaled").map(_._2)
 
-  private def writeDayScaled(spark: SparkSession, dir: String, day: Int,
-      batch: DataFrame, cents: Seq[Seq[Double]], mode: String): Unit = {
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries.scaledAssign(pinned, cents)
-        .withColumn("day", lit(day))
-        .write.mode(mode).partitionBy("day").parquet(s"$dir/assign_scaled")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode(mode).parquet(s"$dir/meta_scaled")
-    } finally pinned.unpersist(blocking = false): Unit
-  }
-
-  /** Append one day against the FROZEN scaled codebook (the same
-    * frozen-quantizer contract as [[advanceDay]] — note K froze at
+  /** Append one day against the FROZEN scaled codebook (K froze at
     * build-time corpus size; a corpus that outgrows its √N codebook
     * re-[[buildScaled]]s, the Faiss retrain event). Idempotent. */
   def advanceDayScaled(batch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = batch.sparkSession
-    val cents = storedScaledCodebook(spark, dir)
-    retireDayScaled(spark, dir, day)
-    writeDayScaled(spark, dir, day, batch, cents, "append")
+    val cents = storedScaledCodebook(batch.sparkSession, dir)
+    retireDayScaled(batch.sparkSession, dir, day)
+    writeDay(scaled, "assign_scaled", dir, day, batch)(sq.scaledAssign(_, cents))
   }
 
-  /** Retire one scaled-face day: partition drop + XOR-heal. */
-  def retireDayScaled(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/assign_scaled/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta_scaled"))) return
-    val kept = spark.read.parquet(s"$dir/meta_scaled")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta_scaled")
-  }
+  /** Retire one scaled-face day. */
+  def retireDayScaled(spark: SparkSession, dir: String, day: Int): Unit =
+    scaled.retire(spark, dir, day)
 
   /** The stored (scaled codebook, assignments) IF configured and fresh
-    * for this exact (corpus, index) pair — the [[openFresh]] contract
-    * for the scaled face: the stored codebook must equal the one the
-    * offered corpus implies at ITS √N sizing (so a grown corpus reads
-    * stale, forcing the retrain), and the index digest must compose. */
+    * for this exact (corpus, index) pair: the build-time corpus digest
+    * must match the offered corpus (so a grown corpus reads stale,
+    * forcing the retrain) and the index digest must compose. */
   def openFreshScaled(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[Seq[Double]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    StoreKernel.open(spark, DirKey, scaled.tag) { dir =>
       val cents = storedScaledCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      // Codebook freshness: the build-time corpus digest (one hash pass
-      // over the offered corpus) — re-deriving the codebook would mean
-      // re-running the k-means job for a trained store. Pre-meta stores
-      // (no codebook_meta_scaled) fall back to the first-K comparison.
-      // Evaluated ONLY when untrusted (TrustKey skips both scans —
-      // review r14 finding 2: an eager digestOf here was exactly the
-      // per-open corpus pass the trust lever exists to avoid).
+      val trusted = StoreKernel.trusted(spark, TrustKey)
+      // Pre-meta stores (no codebook_meta_scaled) fall back to the
+      // first-K comparison. Only evaluated when untrusted.
       val cbFresh = trusted || {
-        if (fs(spark, dir).exists(new Path(s"$dir/codebook_meta_scaled"))) {
+        if (StoreKernel.fs(spark, dir).exists(new Path(s"$dir/codebook_meta_scaled"))) {
           val m = spark.read.parquet(s"$dir/codebook_meta_scaled").head()
           (m.getLong(0), m.getLong(1)) == digestOf(corpus)
-        } else graft.operators.SimilarityQueries.scaledCodebook(
-          corpus, graft.operators.SimilarityQueries.scaledK(corpus)) == cents
+        } else sq.scaledCodebook(corpus, sq.scaledK(corpus)) == cents
       }
-      if (!cbFresh) {
-        System.err.println(s"[vectorstore] $dir scaled codebook differs from this corpus's — assigning inline")
-        return None
+      if (!cbFresh)
+        StoreKernel.fallback(scaled.tag, dir, "scaled codebook differs from the offered corpus's")
+      else scaled.fresh(spark, dir, trusted, digestOf(idxRel)).map { m =>
+        (cents, scaled.read(spark, dir, "assign_scaled", m.live)(
+          StoreKernel.empty(spark, "vec_id BIGINT, nv ARRAY<DOUBLE>, bkt BIGINT"))
+          .select("vec_id", "nv", "bkt"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta_scaled")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir scaled face is stale for this index — assigning inline")
-        None
-      } else if (days.isEmpty) {
-        Some((cents, spark.range(0).select(col("id").as("vec_id"),
-          array().cast("array<double>").as("nv"), col("id").as("bkt"))))
-      } else Some((cents,
-        spark.read.parquet(days.map(d => s"$dir/assign_scaled/day=${d._1}"): _*)
-          .select("vec_id", "nv", "bkt")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir scaled face unreadable (${e.getMessage}) — assigning inline")
-        None
     }
   }
 
@@ -422,142 +317,72 @@ object VectorIndexStore {
   def buildPqScaled(corpus: DataFrame, indexRel: DataFrame, dir: String,
       day: Int = 0, trained: Boolean = true): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val f = fs(spark, dir)
-    Seq("codebook_pqs", "pq_codebook_pqs", "codes_pqs", "meta_pqs",
-      "codebook_meta_pqs")
-      .foreach(p => f.delete(new Path(s"$dir/$p"), true): Unit)
-    // The common build indexes the codebook corpus itself (Bench xpk,
-    // q195's specs) — in that case the artifacts' codes ARE the index
-    // codes, and re-encoding pinnedI would run the N·√N coarse
-    // assignment + subvector explode a second time over a distinct
-    // persisted plan (ADVICE r14). Reference equality is the honest
-    // test: value-equal but distinct plans still need their own encode
-    // because nothing ties their row sets together until the digests.
+    clear(spark, dir, Seq("codebook_pqs", "pq_codebook_pqs", "codes_pqs", "meta_pqs",
+      "codebook_meta_pqs"))
+    // Reference equality is the honest test: value-equal but distinct
+    // plans still need their own encode because nothing ties their row
+    // sets together until the digests.
     val same = corpus eq indexRel
-    val pinnedC = corpus.persist()
-    val pinnedI = if (same) pinnedC else indexRel.persist()
-    try {
-      val sq = graft.operators.SimilarityQueries
-      val k = sq.scaledK(pinnedC)
-      val cents =
-        if (trained) sq.scaledCodebookTrained(pinnedC, k)
-        else sq.scaledCodebook(pinnedC, k)
-      spark.createDataFrame(cents.zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
-        .toDF("c_id", "cv")
-        .coalesce(1).write.parquet(s"$dir/codebook_pqs")
-      // Codebooks (coarse AND PQ) train on the CORPUS — the model
-      // artifacts advance-days stay valid against (the buildScaled
-      // two-relation contract: the codebook source is keyed separately
-      // from the indexed data, so daily advances/retires of the code
-      // set never read stale just because the code set changed —
-      // review r14 finding 1).
-      val (_, pqCents, corpusCodes) = sq.pqScaledIndexArtifactsWith(pinnedC, cents)
-      pqCents.toSeq.flatMap { case (sub, cs) =>
-        cs.map { case (cid, cv) => (sub, cid, cv) }
-      }.toDF("sub", "cid", "cv")
-        .coalesce(1).write.parquet(s"$dir/pq_codebook_pqs")
-      val codes =
-        if (same) corpusCodes
-        else sq.pqEncodeScaledWith(pinnedI, cents, pqCents)
+    StoreKernel.pinned(corpus) { c =>
+      val k = sq.scaledK(c)
+      val cents = if (trained) sq.scaledCodebookTrained(c, k) else sq.scaledCodebook(c, k)
+      writeCodebook(spark, s"$dir/codebook_pqs",
+        cents.zipWithIndex.map { case (cv, i) => (i.toLong, cv) })
+      // Codebooks (coarse AND PQ) train on the CORPUS, keyed separately
+      // from the indexed data, so advances/retires of the code set never
+      // read stale just because the code set changed.
+      val (_, pqCents, corpusCodes) = sq.pqScaledIndexArtifactsWith(c, cents)
+      writePqCodebook(spark, s"$dir/pq_codebook_pqs", pqCents)
       lastPqBuildReusedCodes.set(same)
-      codes.withColumn("day", lit(day))
-        .write.partitionBy("day").parquet(s"$dir/codes_pqs")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (cn, cdg) = digestOfPinned(pinnedC)
-      spark.createDataFrame(Seq((cn, cdg, trained)))
-        .toDF("n_vecs", "digest", "trained")
-        .coalesce(1).write.parquet(s"$dir/codebook_meta_pqs")
-      val (n, dg) = digestOfPinned(pinnedI)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.parquet(s"$dir/meta_pqs")
-    } finally {
-      pinnedC.unpersist(blocking = false): Unit
-      if (!same) pinnedI.unpersist(blocking = false): Unit
+      if (same) {
+        pqScaled.write(corpusCodes, dir, "codes_pqs", day)
+        commitCodebookMeta(spark, dir, s"$dir/codebook_meta_pqs", c, trained)
+        pqScaled.commit(spark, dir, day, digestOfPinned(c))
+      } else StoreKernel.pinned(indexRel) { i =>
+        pqScaled.write(sq.pqEncodeScaledWith(i, cents, pqCents), dir, "codes_pqs", day)
+        commitCodebookMeta(spark, dir, s"$dir/codebook_meta_pqs", c, trained)
+        pqScaled.commit(spark, dir, day, digestOfPinned(i))
+      }
     }
   }
 
   /** The stored scaled coarse codebook — ⌈√N⌉ driver rows. */
   def storedPqScaledCodebook(spark: SparkSession, dir: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$dir/codebook_pqs")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
-      .sortBy(_._1).map(_._2).toSeq
+    codebookAt(spark, s"$dir/codebook_pqs").map(_._2)
 
   /** Append one day of scaled PQ codes, encoded against BOTH frozen
-    * codebooks. Idempotent per day (unconditional retire-then-write). */
+    * codebooks. Idempotent per day. */
   def advanceDayPqScaled(batch: DataFrame, dir: String, day: Int): Unit = {
     val spark = batch.sparkSession
     val cents = storedPqScaledCodebook(spark, dir)
     val pqCents = storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs")
     retireDayPqScaled(spark, dir, day)
-    val pinned = batch.persist()
-    try {
-      graft.operators.SimilarityQueries
-        .pqEncodeScaledWith(pinned, cents, pqCents)
-        .withColumn("day", lit(day))
-        .write.mode("append").partitionBy("day").parquet(s"$dir/codes_pqs")
-      StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-      val (n, dg) = digestOfPinned(pinned)
-      spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_vecs", "digest")
-        .coalesce(1).write.mode("append").parquet(s"$dir/meta_pqs")
-    } finally pinned.unpersist(blocking = false): Unit
+    writeDay(pqScaled, "codes_pqs", dir, day, batch)(sq.pqEncodeScaledWith(_, cents, pqCents))
   }
 
-  /** Retire one scaled-PQ day: partition drop + XOR-heal (safe on a
-    * torn store — no meta ⇒ partition drop only). */
-  def retireDayPqScaled(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/codes_pqs/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta_pqs"))) return
-    val kept = spark.read.parquet(s"$dir/meta_pqs")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_vecs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta_pqs")
-  }
+  /** Retire one scaled-PQ day. */
+  def retireDayPqScaled(spark: SparkSession, dir: String, day: Int): Unit =
+    pqScaled.retire(spark, dir, day)
 
   /** The stored (scaled codebook, PQ codebooks, codes) IF configured
     * and fresh for this exact (codebook corpus, indexed data) pair —
     * the [[openFreshScaled]] two-relation contract: the build-time
-    * codebook digest must equal the OFFERED codebook corpus's (so a
-    * grown/mutated training corpus forces the Faiss retrain event,
-    * with no retraining needed to check), and the XOR-composed day
-    * digests must equal the offered INDEX relation's (so daily
-    * advances and takedowns stay servable — the codes changing is
-    * maintenance, not staleness). Only live-meta day partitions are
-    * read. */
+    * codebook digest must equal the offered codebook corpus's, and the
+    * day digests must compose to the offered INDEX relation. */
   def openFreshPqScaled(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[Seq[Double]], Map[Int, Seq[(Long, Seq[Double])]], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    StoreKernel.open(spark, DirKey, pqScaled.tag) { dir =>
       val cents = storedPqScaledCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted) {
-        val cb = spark.read.parquet(s"$dir/codebook_meta_pqs").head()
-        if ((cb.getLong(0), cb.getLong(1)) != digestOf(corpus)) {
-          System.err.println(s"[vectorstore] $dir scaled-PQ codebook predates this corpus — deriving inline")
-          return None
-        }
+      val trusted = StoreKernel.trusted(spark, TrustKey)
+      lazy val cb = spark.read.parquet(s"$dir/codebook_meta_pqs").head()
+      if (!trusted && (cb.getLong(0), cb.getLong(1)) != digestOf(corpus))
+        StoreKernel.fallback(pqScaled.tag, dir, "scaled-PQ codebook predates the offered corpus")
+      else pqScaled.fresh(spark, dir, trusted, digestOf(idxRel)).map { m =>
+        (cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
+          pqScaled.read(spark, dir, "codes_pqs", m.live)(StoreKernel.empty(spark, CodesDdl))
+            .select("vec_id", "bkt", "sub", "code"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta_pqs")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir scaled-PQ codes are stale for this index — deriving inline")
-        None
-      } else if (days.isEmpty) {
-        Some((cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
-          spark.range(0).select(col("id").as("vec_id"), col("id").as("bkt"),
-            col("id").cast("int").as("sub"), col("id").as("code"))))
-      } else Some((cents, storedPqCodebookAt(spark, s"$dir/pq_codebook_pqs"),
-        spark.read.parquet(days.map(d => s"$dir/codes_pqs/day=${d._1}"): _*)
-          .select("vec_id", "bkt", "sub", "code")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir scaled-PQ face unreadable (${e.getMessage}) — deriving inline")
-        None
     }
   }
 
@@ -570,40 +395,23 @@ object VectorIndexStore {
       }
 
   /** The stored (codebook, assignments) IF configured and fresh for
-    * this exact (corpus, index) pair — None (driver-log line, never an
-    * error) on key unset, unreadable store, stored-vs-implied codebook
-    * mismatch, or index digest mismatch. */
+    * this exact (corpus, index) pair — None (one fallback line) on key
+    * unset, unreadable store, stored-vs-implied codebook mismatch, or
+    * index digest mismatch. */
   def openFresh(corpus: DataFrame, idxRel: DataFrame)
       : Option[(Seq[(Long, Seq[Double])], DataFrame)] = {
     val spark = corpus.sparkSession
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+    StoreKernel.open(spark, DirKey, face.tag) { dir =>
       val cents = storedCodebook(spark, dir)
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      if (!trusted &&
-        graft.operators.SimilarityQueries.centroidList(corpus) != cents) {
-        System.err.println(s"[vectorstore] $dir codebook differs from this corpus's — assigning inline")
-        return None
+      val trusted = StoreKernel.trusted(spark, TrustKey)
+      if (!trusted && sq.centroidList(corpus) != cents)
+        StoreKernel.fallback(face.tag, dir, "codebook differs from the offered corpus's")
+      else face.fresh(spark, dir, trusted, digestOf(idxRel)).map { m =>
+        (cents, face.read(spark, dir, "assign", m.live)(spark.createDataFrame(
+          spark.sparkContext.emptyRDD[Row],
+          idxRel.select(col("vec_id").as("n_id"), col("embedding").as("n_vec"),
+            lit(0L).as("bkt")).schema)).select("n_id", "n_vec", "bkt"))
       }
-      val (days, stored) = liveMeta(spark, s"$dir/meta")
-      if (!trusted && digestOf(idxRel) != stored) {
-        System.err.println(s"[vectorstore] $dir is stale for this index — assigning inline")
-        None
-      } else if (days.isEmpty) {
-        // zero live days: the index is legitimately empty (empty
-        // assign/ has no schema to infer — serve the typed relation)
-        Some((cents, spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          idxRel.select(col("vec_id").as("n_id"),
-            col("embedding").as("n_vec"), lit(0L).as("bkt")).schema)))
-      } else Some((cents,
-        spark.read.parquet(days.map(d => s"$dir/assign/day=${d._1}"): _*)
-          .select("n_id", "n_vec", "bkt")))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[vectorstore] $dir unreadable (${e.getMessage}) — assigning inline")
-        None
     }
   }
 }

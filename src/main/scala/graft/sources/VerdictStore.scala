@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -73,17 +71,11 @@ import org.apache.spark.sql.types._
   *   <dir>/day_meta/day=N/         (n/dg per modality)  day commit, LAST
   * }}}
   *
-  * Freshness ([[openFreshThreeEye]]/[[openFreshTwoEye]]): XOR-composed
-  * per-day metas must equal the OFFERED train corpus's digests and
-  * XOR-composed per-benchmark metas the offered suite's — one hash
-  * scan per offered relation, no probe, no decode (the train img side
-  * is digested over HASHES, which q197/q198's callers already hold
-  * via [[MediaHashStore]]'s dispatch). Stale/missing/torn ⇒ None —
-  * the caller recomputes inline: cost, never a missed pair. Commit
-  * points: metas land LAST on advance and are deleted FIRST on
-  * retire, so a crash in either direction leaves the store stale (→
-  * inline), never wrong, and every advance is retire-then-write
-  * convergent under replay.
+  * Freshness ([[openFreshThreeEye]]/[[openFreshTwoEye]]) follows the
+  * [[StoreKernel]] contract over two bench-style meta roots: the
+  * per-day metas must compose to the OFFERED train corpus and the
+  * per-benchmark metas to the offered suite (the train img side is
+  * digested over HASHES, never a decode).
   */
 object VerdictStore {
 
@@ -167,9 +159,6 @@ object VerdictStore {
         "once in the offered suite — duplicate evidence would inflate hit counts")
   }
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
-
   /** The three per-modality digests of one corpus side — (n, xor) per
     * eye, each subset-decomposable so day/bench partitions compose. */
   private def digests(c: Corpus): ((Long, Long), (Long, Long), (Long, Long)) =
@@ -185,21 +174,18 @@ object VerdictStore {
     (SignatureStore.digestOfPinned(c.txt), VectorIndexStore.digestOfPinned(c.emb),
       MediaHashStore.digestOfPinned(c.img))
 
-  /** Meta rows are the stores' COMMIT points, and the probe between a
-    * mutator's entry check and its meta write is long — re-check the
-    * lease immediately before committing so a writer fenced mid-probe
-    * fails loud HERE instead of committing metas over a new owner's
-    * content (ADVICE r17). The residual window is one FS write: a fence
-    * landing inside it still reads as stale (digest backstop), never
-    * wrong. */
+  private val MetaCols = Seq("n_txt", "dg_txt", "n_emb", "dg_emb", "n_img", "dg_img")
+
+  /** The kernel's single meta commit, one row of per-eye digests. */
   private def writeMetaRow(spark: SparkSession, dir: String, path: String,
-      d: ((Long, Long), (Long, Long), (Long, Long))): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    spark.createDataFrame(Seq(
-        (d._1._1, d._1._2, d._2._1, d._2._2, d._3._1, d._3._2)))
-      .toDF("n_txt", "dg_txt", "n_emb", "dg_emb", "n_img", "dg_img")
-      .coalesce(1).write.parquet(path)
-  }
+      d: ((Long, Long), (Long, Long), (Long, Long))): Unit =
+    StoreKernel.commitRow(spark, dir, path, spark.createDataFrame(Seq(
+        (d._1._1, d._1._2, d._2._1, d._2._2, d._3._1, d._3._2))).toDF(MetaCols: _*))
+
+  /** `c`'s three relations pinned across `body`. */
+  private def pinnedCorpus[A](c: Corpus)(body: Corpus => A): A =
+    StoreKernel.pinned(c.txt)(t => StoreKernel.pinned(c.emb)(e =>
+      StoreKernel.pinned(c.img)(i => body(Corpus(t, e, i)))))
 
   // ------------------------------------------------------- build
 
@@ -228,21 +214,13 @@ object VerdictStore {
     suite.foreach { case (name, _) => requireSafeBenchName(name) }
     val spark = train.txt.sparkSession
     lockFor(dir).synchronized {
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
+    StoreKernel.replace(spark, dir)
     spark.createDataFrame(Seq((tau, maxHamming)))
       .toDF("tau", "max_hamming")
       .coalesce(1).write.parquet(s"$dir/params")
-    val src = codebookFrom.getOrElse(
-      train.emb.unionByName(suite.map(_._2.emb).reduce(_ unionByName _)))
-    val cents =
-      if (trained) graft.operators.SimilarityQueries
-        .trainedCodebook(src, graft.operators.SimilarityQueries.NumCentroids)
-      else graft.operators.SimilarityQueries.centroidList(src)
-    require(cents.nonEmpty,
-      s"verdict store $dir: codebook source has no vec_id below the codebook size")
-    spark.createDataFrame(cents).toDF("c_id", "cv")
-      .coalesce(1).write.parquet(s"$dir/codebook")
+    VectorIndexStore.freezeCodebook(codebookFrom.getOrElse(
+      train.emb.unionByName(suite.map(_._2.emb).reduce(_ unionByName _))),
+      dir, trained, "verdict store")
     suite.foreach { case (name, c) =>
       // Write path: aggregate digests, never the per-file cache — the
       // uniform maintainer-commit rule (FileDigests.digestOfPinned).
@@ -255,8 +233,7 @@ object VerdictStore {
   /** The stored frozen codebook — K driver rows (bounded by the
     * codebook convention, never corpus-sized). */
   def storedCodebook(spark: SparkSession, dir: String): Seq[(Long, Seq[Double])] =
-    spark.read.parquet(s"$dir/codebook")
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    VectorIndexStore.storedCodebook(spark, dir)
 
   private def storedParams(spark: SparkSession, dir: String): (Double, Int) = {
     val r = spark.read.parquet(s"$dir/params").head()
@@ -329,63 +306,55 @@ object VerdictStore {
         "the offered suite does not name — a day advanced without probing them " +
         "would serve fresh-but-wrong verdicts; re-wire the ingest face with the " +
         "current suite (or retire the benchmark first)")
-    graft.core.Caches.scoped {
-      val pinned = Corpus(batch.txt.persist(), batch.emb.persist(),
-        batch.img.persist())
-      try {
-        suite.foreach { case (name, bench) =>
-          // The check-vs-probe coherence here deliberately does NOT pin
-          // the benchmark (measured r18: persisting the bench corpus
-          // cost 2–3× on this hot maintainer face at sf0.1, 7.8 →
-          // 26.6 s). It doesn't need to: the digest below and the probe
-          // read the SAME frozen file listing inside `bench`'s analyzed
-          // relations, so a file replaced mid-call fails BOTH loudly
-          // (FileNotFound) rather than diverging, and the only silent
-          // divergence is an in-place byte edit preserving (path, len,
-          // mtime) — the documented FileDigests caveat, unreachable
-          // through Spark writers. Contrast advanceBenchmark, which
-          // COMMITS a meta digest derived from its bench and therefore
-          // does pin (ADVICE r17).
-          val offered = digests(bench)
-          val stored = storedMetas
-            .find(_._1 == name)
-            .getOrElse(sys.error(
-              s"verdict store $dir has no live benchmark '$name' — advance the suite first"))
-          require(offered == stored._2,
-            s"verdict store $dir: offered relations for benchmark '$name' do not match " +
-              "its stored suite meta — refusing to mix evidence across suite versions")
-          val (g, s, i) = probe(pinned, bench, cents, tau, maxHamming)
-          val srcCol = lit(s"d$day").as("src")
-          writeEvidence(dir, "gram", name, g.select(col("doc_id"), col("p"), srcCol))
-          writeEvidence(dir, "sem", name,
-            s.select(col("doc_id"), col("eval_doc"), col("sim"), srcCol))
-          writeEvidence(dir, "img", name,
-            i.select(col("doc_id"), col("eval_doc"), col("hamming"), srcCol))
-        }
-        val t = pinned.txt.select(col("doc_id")).withColumn("in_txt", lit(true))
-        val e = pinned.emb.select(col("vec_id").as("doc_id"))
-          .withColumn("in_emb", lit(true))
-        val i = pinned.img.select(col("media_id").as("doc_id"))
-          .withColumn("in_img", lit(true))
-        t.join(e, Seq("doc_id"), "full_outer")
-          .join(i, Seq("doc_id"), "full_outer")
-          .select(col("doc_id"),
-            coalesce(col("in_txt"), lit(false)).as("in_txt"),
-            coalesce(col("in_emb"), lit(false)).as("in_emb"),
-            coalesce(col("in_img"), lit(false)).as("in_img"))
-          .write.parquet(s"$dir/base/day=$day")
-        // Day meta LAST — the commit point. Digests are taken over the
-        // PINNED batch via the whole-relation aggregate — the same
-        // evaluation the evidence derived from (the WinnowStore tear
-        // argument); the per-file cache would re-read disk behind the
-        // pin (ADVICE r17).
-        writeMetaRow(spark, dir, s"$dir/day_meta/day=$day", digestsPinned(pinned))
-      } finally {
-        pinned.txt.unpersist(blocking = false): Unit
-        pinned.emb.unpersist(blocking = false): Unit
-        pinned.img.unpersist(blocking = false): Unit
+    graft.core.Caches.scoped(pinnedCorpus(batch) { pinned =>
+      suite.foreach { case (name, bench) =>
+        // The check-vs-probe coherence here deliberately does NOT pin
+        // the benchmark (measured r18: persisting the bench corpus
+        // cost 2–3× on this hot maintainer face at sf0.1, 7.8 →
+        // 26.6 s). It doesn't need to: the digest below and the probe
+        // read the SAME frozen file listing inside `bench`'s analyzed
+        // relations, so a file replaced mid-call fails BOTH loudly
+        // (FileNotFound) rather than diverging, and the only silent
+        // divergence is an in-place byte edit preserving (path, len,
+        // mtime) — the documented FileDigests caveat, unreachable
+        // through Spark writers. Contrast advanceBenchmark, which
+        // COMMITS a meta digest derived from its bench and therefore
+        // does pin (ADVICE r17).
+        val offered = digests(bench)
+        val stored = storedMetas
+          .find(_._1 == name)
+          .getOrElse(sys.error(
+            s"verdict store $dir has no live benchmark '$name' — advance the suite first"))
+        require(offered == stored._2,
+          s"verdict store $dir: offered relations for benchmark '$name' do not match " +
+            "its stored suite meta — refusing to mix evidence across suite versions")
+        val (g, s, i) = probe(pinned, bench, cents, tau, maxHamming)
+        val srcCol = lit(s"d$day").as("src")
+        writeEvidence(dir, "gram", name, g.select(col("doc_id"), col("p"), srcCol))
+        writeEvidence(dir, "sem", name,
+          s.select(col("doc_id"), col("eval_doc"), col("sim"), srcCol))
+        writeEvidence(dir, "img", name,
+          i.select(col("doc_id"), col("eval_doc"), col("hamming"), srcCol))
       }
-    }
+      val t = pinned.txt.select(col("doc_id")).withColumn("in_txt", lit(true))
+      val e = pinned.emb.select(col("vec_id").as("doc_id"))
+        .withColumn("in_emb", lit(true))
+      val i = pinned.img.select(col("media_id").as("doc_id"))
+        .withColumn("in_img", lit(true))
+      t.join(e, Seq("doc_id"), "full_outer")
+        .join(i, Seq("doc_id"), "full_outer")
+        .select(col("doc_id"),
+          coalesce(col("in_txt"), lit(false)).as("in_txt"),
+          coalesce(col("in_emb"), lit(false)).as("in_emb"),
+          coalesce(col("in_img"), lit(false)).as("in_img"))
+        .write.parquet(s"$dir/base/day=$day")
+      // Day meta LAST — the commit point. Digests are taken over the
+      // PINNED batch via the whole-relation aggregate — the same
+      // evaluation the evidence derived from (the WinnowStore tear
+      // argument); the per-file cache would re-read disk behind the
+      // pin (ADVICE r17).
+      writeMetaRow(spark, dir, s"$dir/day_meta/day=$day", digestsPinned(pinned))
+    })
   }
 
   /** Drop one ingest day (takedown/expiry): day meta FIRST (inverse
@@ -398,7 +367,7 @@ object VerdictStore {
   def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
       lockFor(dir).synchronized {
     StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
     f.delete(new Path(s"$dir/day_meta/day=$day"), true): Unit
     f.delete(new Path(s"$dir/base/day=$day"), true): Unit
     Seq("ev_gram", "ev_sem", "ev_img").foreach { eye =>
@@ -428,15 +397,11 @@ object VerdictStore {
     retireBenchmark(name, spark, dir)
     val cents = storedCodebook(spark, dir)
     val (tau, maxHamming) = storedParams(spark, dir)
-    graft.core.Caches.scoped {
-      val pinned = Corpus(history.txt.persist(), history.emb.persist(),
-        history.img.persist())
-      // The benchmark is pinned too (eval-suite-sized): its suite meta
-      // commits a digest, and that digest must describe the snapshot
-      // the probe's evidence derived from — both read one pin.
-      val pinnedBench = Corpus(bench.txt.persist(), bench.emb.persist(),
-        bench.img.persist())
-      try {
+    // The benchmark is pinned too (eval-suite-sized): its suite meta
+    // commits a digest, and that digest must describe the snapshot the
+    // probe's evidence derived from — both read one pin.
+    graft.core.Caches.scoped(pinnedCorpus(history) { pinned =>
+      pinnedCorpus(bench) { pinnedBench =>
         val dayRows = readMetas(spark, s"$dir/day_meta", "day")
         val composed = composeDigests(dayRows.map(_._2))
         require(composed == digestsPinned(pinned),
@@ -454,14 +419,8 @@ object VerdictStore {
         writeEvidence(dir, "img", name, attributed(i, "in_img"))
         writeMetaRow(spark, dir, s"$dir/suite_meta/bench=$name",
           digestsPinned(pinnedBench))
-      } finally {
-        Seq(pinned, pinnedBench).foreach { c =>
-          c.txt.unpersist(blocking = false): Unit
-          c.emb.unpersist(blocking = false): Unit
-          c.img.unpersist(blocking = false): Unit
-        }
       }
-    }
+    })
   }
 
   /** Drop ONE benchmark (deprecation/takedown): suite meta FIRST, then
@@ -472,7 +431,7 @@ object VerdictStore {
   def retireBenchmark(name: String, spark: SparkSession, dir: String): Unit =
       lockFor(dir).synchronized {
     StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
+    val f = StoreKernel.fs(spark, dir)
     f.delete(new Path(s"$dir/suite_meta/bench=$name"), true): Unit
     Seq("ev_gram", "ev_sem", "ev_img").foreach(eye =>
       f.delete(new Path(s"$dir/$eye/bench=$name"), true): Unit)
@@ -501,16 +460,11 @@ object VerdictStore {
     * legal names ([[requireSafeBenchName]] rejects '%'). */
   private[sources] def readMetas(spark: SparkSession, root: String,
       partCol: String): Seq[(String, Dg)] = {
-    if (!fs(spark, root).exists(new Path(root))) return Seq.empty
-    val schema = StructType(
-      Seq("n_txt", "dg_txt", "n_emb", "dg_emb", "n_img", "dg_img")
-        .map(StructField(_, LongType)) :+ StructField(partCol, StringType))
-    spark.read.schema(schema).option("basePath", root).parquet(root)
-      .collect().map { r =>
-        (r.getString(6),
-          ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)),
-            (r.getLong(4), r.getLong(5))))
-      }.toSeq
+    if (!StoreKernel.fs(spark, root).exists(new Path(root))) return Seq.empty
+    StoreKernel.keyedMetas(spark, root, partCol, MetaCols).map { r =>
+      (r.getString(6),
+        ((r.getLong(0), r.getLong(1)), (r.getLong(2), r.getLong(3)), (r.getLong(4), r.getLong(5))))
+    }
   }
 
   private def composeDigests(ds: Seq[Dg]): Dg = {
@@ -553,7 +507,7 @@ object VerdictStore {
     // serves all-keep, correctly. Any OTHER read failure propagates
     // loudly — after the freshness digests passed, silently serving
     // empty evidence would under-report contamination.
-    if (!fs(spark, dir).exists(new Path(root)))
+    if (!StoreKernel.fs(spark, dir).exists(new Path(root)))
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dataSchema)
     spark.read
@@ -565,25 +519,20 @@ object VerdictStore {
       .select(cols: _*)
   }
 
-  /** Everything a serve needs, or None when unset/unreadable/stale:
-    * (live benches, live days, their composed digests). */
-  private def opened(spark: SparkSession): Option[(String, Seq[String], Seq[String], Dg, Dg)] = {
-    val dir = spark.conf.get(DirKey, "")
-    if (dir.isEmpty) return None
-    try {
+  /** A serve over the live benches and days, when `fresh` accepts the
+    * composed (suite, day) digests — the kernel's open: None with one
+    * fallback line when unset, unreadable, empty or stale. */
+  private def serve[A](spark: SparkSession)(fresh: (String, Dg, Dg) => Boolean)(
+      body: (String, Seq[String], Seq[String]) => A): Option[A] =
+    StoreKernel.open(spark, DirKey, "verdictstore") { dir =>
       val suiteRows = readMetas(spark, s"$dir/suite_meta", "bench")
       val dayRows = readMetas(spark, s"$dir/day_meta", "day")
-      if (suiteRows.isEmpty || dayRows.isEmpty) {
-        System.err.println(s"[verdictstore] $dir has no live benchmarks/days — recomputing inline")
-        None
-      } else Some((dir, suiteRows.map(_._1), dayRows.map(_._1),
-        composeDigests(suiteRows.map(_._2)), composeDigests(dayRows.map(_._2))))
-    } catch {
-      case NonFatal(e) =>
-        System.err.println(s"[verdictstore] unreadable (${e.getMessage}) — recomputing inline")
-        None
+      if (suiteRows.isEmpty || dayRows.isEmpty)
+        StoreKernel.fallback("verdictstore", dir, "has no live benchmarks/days")
+      else if (!fresh(dir, composeDigests(suiteRows.map(_._2)), composeDigests(dayRows.map(_._2))))
+        StoreKernel.fallback("verdictstore", dir, "is stale for the offered corpus/suite")
+      else Some(body(dir, suiteRows.map(_._1), dayRows.map(_._1)))
     }
-  }
 
   private def baseIds(spark: SparkSession, dir: String, days: Seq[String],
       flag: String): DataFrame =
@@ -607,111 +556,62 @@ object VerdictStore {
   /** The stored THREE-EYE verdict relation (q198's shape) IF the store
     * is configured and FRESH for the offered train corpus and suite —
     * every digest one hash scan, zero probes, zero decodes; the
-    * rollups run over match-sized evidence. None (a driver-log line,
-    * never an error) on key unset, unreadable store, or any digest
-    * mismatch — the caller recomputes inline. */
+    * rollups run over match-sized evidence. Thresholds are part of
+    * freshness and never trusted away: a store built at another τ or
+    * hamming radius holds differently-thresholded evidence. */
   def openFreshThreeEye(train: Corpus, suite: Corpus,
       tau: Double = graft.operators.SimilarityQueries.SemDeconTau,
       maxHamming: Int = graft.operators.MediaQueries.MaxHamming)
       : Option[DataFrame] = {
     val spark = train.txt.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          // Thresholds are part of freshness (review r16 finding 2): a
-          // store built at a different τ / hamming radius holds
-          // evidence thresholded differently from what the caller's
-          // verdict contract promises — digest-fresh data, WRONG
-          // verdicts. Never trusted away: params are one driver row.
-          storedParams(spark, dir) == ((tau, maxHamming)) &&
-            (trusted || (digests(suite) == suiteDg && digests(train) == dayDg))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for this corpus/suite — recomputing inline")
-        None
-      } else Some(graft.streaming.DeconGate.composeThreeEye(
+    serve(spark) { (dir, suiteDg, dayDg) =>
+      storedParams(spark, dir) == ((tau, maxHamming)) &&
+        (StoreKernel.trusted(spark, TrustKey) ||
+          (digests(suite) == suiteDg && digests(train) == dayDg))
+    } { (dir, benches, days) =>
+      graft.streaming.DeconGate.composeThreeEye(
         graft.streaming.DeconGate.composeTwoEye(
           gramVerdict(spark, dir, benches, days),
           semVerdict(spark, dir, benches, days)),
         graft.streaming.DeconGate.flagMediaFromPairs(
           baseIds(spark, dir, days, "in_img"),
-          readEvidence(spark, dir, "img", benches, days))))
+          readEvidence(spark, dir, "img", benches, days)))
     }
   }
 
   /** The stored MEDIA PAIR relation (doc_id, eval_doc, hamming) — the
-    * q197 relation itself, because the media eye's evidence one level
-    * below the verdict IS the pair relation the coverage (q199) and
-    * scrub (q200) reports roll up. Served when the store is fresh for
-    * the offered (train hashes, suite hashes) at the stored radius —
-    * and ONLY the image modality is compared: the eyes are
-    * independent, so a text edit that staled the gram evidence cannot
-    * invalidate a media pair (per-modality freshness, the store's
-    * decomposition argument applied to reads). With this dispatch the
-    * whole media decon report tier costs two 16-byte-row hash scans +
-    * an evidence read when maintained — zero decodes, zero band
-    * joins. */
+    * q197 relation itself, which the coverage (q199) and scrub (q200)
+    * reports roll up. Only the image modality is compared: the eyes are
+    * independent, so a text edit cannot invalidate a media pair. */
   def openFreshMediaPairs(trainImg: DataFrame, suiteImg: DataFrame,
       maxHamming: Int = graft.operators.MediaQueries.MaxHamming)
       : Option[DataFrame] = {
     val spark = trainImg.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          storedParams(spark, dir)._2 == maxHamming && (trusted ||
-            (MediaHashStore.digestOf(suiteImg) == suiteDg._3 &&
-              MediaHashStore.digestOf(trainImg) == dayDg._3))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for these media hashes — recomputing inline")
-        None
-      } else Some(readEvidence(spark, dir, "img", benches, days))
-    }
+    serve(spark) { (dir, suiteDg, dayDg) =>
+      storedParams(spark, dir)._2 == maxHamming && (StoreKernel.trusted(spark, TrustKey) ||
+        (MediaHashStore.digestOf(suiteImg) == suiteDg._3 &&
+          MediaHashStore.digestOf(trainImg) == dayDg._3))
+    }((dir, benches, days) => readEvidence(spark, dir, "img", benches, days))
   }
 
-  /** The stored TWO-EYE verdict relation (q196's shape) — the same
-    * store serving its gram + semantic evidence only. Freshness
-    * compares ONLY the text and embedding digests: a two-eye reader
-    * holds no image relations, and the media evidence it ignores
-    * cannot change a two-eye verdict. */
+  /** The stored TWO-EYE verdict relation (q196's shape). Freshness
+    * compares ONLY the text and embedding digests and τ: a two-eye
+    * reader holds no image relations. */
   def openFreshTwoEye(trainTxt: DataFrame, trainEmb: DataFrame,
       suiteTxt: DataFrame, suiteEmb: DataFrame,
       tau: Double = graft.operators.SimilarityQueries.SemDeconTau)
       : Option[DataFrame] = {
     val spark = trainTxt.sparkSession
-    opened(spark).flatMap { case (dir, benches, days, suiteDg, dayDg) =>
-      val trusted = spark.conf.get(TrustKey, "false").toBoolean
-      val fresh =
-        try
-          // τ is part of freshness (the three-eye face's argument); the
-          // hamming radius is not compared here — a two-eye reader
-          // ignores the media evidence the radius thresholded.
-          storedParams(spark, dir)._1 == tau && (trusted ||
-          ((SignatureStore.digestOf(suiteTxt), VectorIndexStore.digestOf(suiteEmb)) ==
-            ((suiteDg._1, suiteDg._2)) &&
+    serve(spark) { (dir, suiteDg, dayDg) =>
+      storedParams(spark, dir)._1 == tau && (StoreKernel.trusted(spark, TrustKey) ||
+        ((SignatureStore.digestOf(suiteTxt), VectorIndexStore.digestOf(suiteEmb)) ==
+          ((suiteDg._1, suiteDg._2)) &&
           (SignatureStore.digestOf(trainTxt), VectorIndexStore.digestOf(trainEmb)) ==
             ((dayDg._1, dayDg._2))))
-        catch {
-          case NonFatal(e) =>
-            System.err.println(s"[verdictstore] $dir freshness scan failed (${e.getMessage}) — recomputing inline")
-            false
-        }
-      if (!fresh) {
-        System.err.println(s"[verdictstore] $dir is stale for this corpus/suite — recomputing inline")
-        None
-      } else Some(graft.streaming.DeconGate.composeTwoEye(
+    } { (dir, benches, days) =>
+      graft.streaming.DeconGate.composeTwoEye(
         gramVerdict(spark, dir, benches, days),
-        semVerdict(spark, dir, benches, days)))
+        semVerdict(spark, dir, benches, days))
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -13,19 +12,15 @@ import org.apache.spark.sql.functions._
   * re-DECODING the whole segment index — the one cost the index
   * exists to amortize.
   *
-  * Same algebra as its siblings: [[advanceDay]] decodes only its own
-  * batch, [[retireDay]] drops a day's partition and XORs its digest
-  * back out, and [[open]] serves the composed (video_id, seg_fp)
-  * relation with zero decodes — so
+  * On the [[StoreKernel]] contract (day-keyed): [[advanceDay]] decodes
+  * only its own batch and [[retireDay]] never touches another day, so
   * `VideoSegDedup.sharedSegmentPairs(open(...))` after a retire equals
-  * the pairs of an index REBUILT without that day (spec-pinned).
+  * the pairs of an index REBUILT without that day (spec-pinned). The
+  * per-day digest is over the stored (video_id, seg_fp) rows,
+  * recomputed from the just-written partition: the decode behind
+  * segmentFingerprints must not be trusted to reproduce
+  * byte-identically on a second evaluation.
   *
-  * The per-day digest is over (video_id, seg_fp) rows — a video with
-  * N eligible segments contributes N rows, exact under union /
-  * difference of disjoint day batches, verifiable without touching a
-  * single container byte.
-  *
-  * Layout under one root:
   * {{{
   *   <dir>/segs/day=N/  (video_id, seg_fp)
   *   <dir>/meta/        (day, n_segs, digest) one row per day
@@ -34,102 +29,44 @@ import org.apache.spark.sql.functions._
 object VideoSegStore {
 
   /** Session conf: skip [[open]]'s digest verification and trust the
-    * store — the audit-vs-daily-probe lever every sibling store
-    * exposes. Default false: verify. */
+    * store. Default false: verify. */
   val TrustKey = "spark.graft.videostore.trust"
 
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+  private val face = StoreKernel.DayFace("videostore", "meta", "n_segs", Seq("segs"))
 
   /** Order-independent digest of a fingerprint batch:
-    * (count, XOR of xxhash64(video_id, seg_fp)) — [[FileDigests]]-cached
-    * per file like the rest of the store family. */
+    * (count, XOR of xxhash64(video_id, seg_fp)), [[FileDigests]]-cached. */
   def digestOf(fps: DataFrame): (Long, Long) =
     FileDigests.digestOf(fps, xxhash64(col("video_id"), col("seg_fp")))
 
-  private def writeDay(spark: SparkSession, dir: String, day: Int,
-      fpBatch: DataFrame, mode: String): Unit = {
-    fpBatch.select("video_id", "seg_fp").withColumn("day", lit(day))
-      .write.mode(mode).partitionBy("day").parquet(s"$dir/segs")
-    // Meta lands LAST (the commit point), and the digest is computed
-    // from the JUST-WRITTEN partition, not the batch plan again — the
-    // decode behind segmentFingerprints is exactly the kind of
-    // re-evaluated input whose second run must not be trusted to
-    // reproduce byte-identically (MediaHashStore.writeDay's argument).
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    val (n, dg) = digestOf(spark.read.parquet(s"$dir/segs/day=$day"))
-    spark.createDataFrame(Seq((day, n, dg))).toDF("day", "n_segs", "digest")
-      .coalesce(1).write.mode(mode).parquet(s"$dir/meta")
+  private def writeDay(spark: SparkSession, dir: String, day: Int, fpBatch: DataFrame): Unit = {
+    face.write(fpBatch.select("video_id", "seg_fp"), dir, "segs", day)
+    face.commit(spark, dir, day, face.writtenDigest(spark, dir, "segs", day, digestOf))
   }
 
   /** Build a fresh store from an already-fingerprinted
     * (video_id, seg_fp) relation, replacing any prior content. */
   def build(fps: DataFrame, dir: String, day: Int = 0): Unit = {
-    val spark = fps.sparkSession
-    StoreLease.checkWrite(spark, dir)
-    StoreLease.replaceContents(spark, dir)
-    writeDay(spark, dir, day, fps, "errorifexists")
+    StoreKernel.replace(fps.sparkSession, dir)
+    writeDay(fps.sparkSession, dir, day, fps)
   }
 
   /** Append one ingest day of segment fingerprints (the day's videos
-    * decode exactly once, here). Idempotent per day — the retire is
-    * UNCONDITIONAL (not meta-guarded), so a replayed advance after a
-    * crashed build (segs/day=N written, meta never committed) rewrites
-    * the orphan partition instead of appending duplicate rows into it
-    * (ADVICE r13). */
+    * decode exactly once, here). Idempotent per day. */
   def advanceDay(fpBatch: DataFrame, dir: String, day: Int): Unit = {
-    val spark = fpBatch.sparkSession
-    retireDay(spark, dir, day)
-    writeDay(spark, dir, day, fpBatch, "append")
+    retireDay(fpBatch.sparkSession, dir, day)
+    writeDay(fpBatch.sparkSession, dir, day, fpBatch)
   }
 
-  /** Retire one day (takedown/expiry): drop its partition, XOR its
-    * digest out — the retired day's videos become unfindable with zero
-    * decodes and zero touches of other days. Safe on a torn store: the
-    * partition drop never needs the meta, and the XOR-heal is skipped
-    * when no meta was ever committed (ADVICE r13 — retire must be able
-    * to REPAIR a crashed build, not throw on it). */
-  def retireDay(spark: SparkSession, dir: String, day: Int): Unit = {
-    StoreLease.checkWrite(spark, dir)
-    val f = fs(spark, dir)
-    f.delete(new Path(s"$dir/segs/day=$day"), true): Unit
-    if (!f.exists(new Path(s"$dir/meta"))) return
-    val kept = spark.read.parquet(s"$dir/meta")
-      .where(col("day") =!= day).collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    StoreLease.checkWrite(spark, dir) // commit-point re-check (ADVICE r17)
-    spark.createDataFrame(kept).toDF("day", "n_segs", "digest")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
+  /** Retire one day (takedown/expiry): zero decodes, zero touches of
+    * other days. */
+  def retireDay(spark: SparkSession, dir: String, day: Int): Unit =
+    face.retire(spark, dir, day)
 
-  /** The stored index across all live days, digest-verified unless
-    * [[TrustKey]] is set. Retiring the LAST live day serves an empty
-    * relation — after verifying `segs/` holds no orphan day partition
-    * (a crashed advance's data without its meta row must raise the
-    * torn error, not silently drop candidates — the MediaHashStore r13
-    * fix, carried here from birth). */
-  def open(spark: SparkSession, dir: String): DataFrame = {
-    val m = spark.read.parquet(s"$dir/meta")
-      .agg(coalesce(sum("n_segs"), lit(0L)),
-        coalesce(call_function("bit_xor", col("digest")), lit(0L))).head()
-    val stored = (m.getLong(0), m.getLong(1))
-    val trusted = spark.conf.get(TrustKey, "false").toBoolean
-    if (stored._1 == 0L) {
-      if (!trusted) {
-        val f = fs(spark, dir)
-        val segsPath = new Path(s"$dir/segs")
-        val orphans = f.exists(segsPath) &&
-          f.listStatus(segsPath).exists(_.getPath.getName.startsWith("day="))
-        require(!orphans,
-          s"video segment store $dir is torn: segs/ has day partitions but the meta sums to zero")
-      }
-      import spark.implicits._
-      return Seq.empty[(Long, String)].toDF("video_id", "seg_fp")
-    }
-    val idx = spark.read.parquet(s"$dir/segs").select("video_id", "seg_fp")
-    if (!trusted)
-      require(digestOf(idx) == stored,
-        s"video segment store $dir is torn: partition digest != meta digest $stored")
-    idx
-  }
+  /** The stored index across all live days — the kernel's audit read,
+    * digest-verified unless [[TrustKey]] is set. */
+  def open(spark: SparkSession, dir: String): DataFrame =
+    face.audited(spark, dir, "segs", Seq("video_id", "seg_fp"),
+      StoreKernel.trusted(spark, TrustKey), digestOf)(
+      StoreKernel.empty(spark, "video_id BIGINT, seg_fp STRING"))
 }

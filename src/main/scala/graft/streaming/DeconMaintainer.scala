@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.sources.DeconStore
+import graft.sources.{DeconStore, StoreKernel}
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the GRAM decontamination store
@@ -24,39 +24,24 @@ import graft.state.JdbcStateStore
   * replacement (retire + advance rows in the same batch) lands as the
   * new content; a retire needs no docs (its doc_id/text are ignored).
   *
-  * Exactly-once by the tier's two moves: [[DeconStore.advanceBenchmark]]
-  * is convergent under replay (retire-then-write of one benchmark's
-  * partitions, meta commit point LAST) and the control-table batch
-  * marker skips committed replays. A crash mid-retire deletes the meta
-  * FIRST (DeconStore's inverse commit order), so orphan fps/grams are
-  * no longer covered by the combined digest → readers fall back inline
-  * — cost, never a stale verdict. Per batch the cost is one bounded
-  * distinct over the batch's (bench, action) pairs plus one
-  * benchmark-sized winnow + gram derivation per advanced benchmark —
-  * suite edits are benchmark-sized, never corpus-sized.
+  * Exactly-once via [[StoreKernel.advanceOnce]] over the shared
+  * [[SuiteEditBatch]] protocol; suite edits are benchmark-sized, never
+  * corpus-sized.
   */
 object DeconMaintainer {
 
-  /** Apply one micro-batch of suite edits exactly once (the shared
-    * [[SuiteEditBatch]] protocol — pinned batch, retires first,
-    * unknown actions fail loud BEFORE the marker commits); returns
-    * true when this call applied them. */
+  /** Apply one micro-batch of suite edits exactly once; returns true
+    * when this call applied them. */
   def applyBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
-      dir: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    SuiteEditBatch.applyOnce(batch, store, sinkId, batchId)(
-      DeconStore.retireBenchmark(_, spark, dir),
-      (b, rows) => DeconStore.advanceBenchmark(b,
-        rows.select("doc_id", "text"), dir))
-  }
+      dir: String, batchId: Long): Boolean =
+    StoreKernel.advanceOnce(store, sinkId, batchId)(apply(batch, dir))
 
-  /** Wire a streaming suite-edit DataFrame (bench, action, doc_id,
-    * text) into the maintainer. Caller starts it (and owns
-    * checkpointLocation, trigger, etc.). */
+  /** Wire a streaming suite-edit DataFrame into the maintainer. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applyBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    StoreKernel.exactlyOnce(stream, store, sinkId)((df, _) => apply(df, dir))
+
+  private def apply(batch: DataFrame, dir: String): Unit =
+    SuiteEditBatch(batch)(DeconStore.retireBenchmark(_, batch.sparkSession, dir),
+      (b, rows) => DeconStore.advanceBenchmark(b, rows.select("doc_id", "text"), dir))
 }

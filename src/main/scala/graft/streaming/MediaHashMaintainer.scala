@@ -5,72 +5,41 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.multimodal.MediaDedup
-import graft.sources.MediaHashStore
+import graft.sources.{MediaHashStore, StoreKernel}
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the media hash index's SOURCED face
-  * ([[MediaHashStore]]) — the [[VideoSegMaintainer]] contract for the
-  * decon tier's media eye (r15): each micro-batch of arriving
-  * (media_id, text, content) rows is DECODED ONCE, its dHashes
-  * appended as the batch's own day with the day's source digest, so
-  * [[graft.operators.MediaQueries]]' q197/q198 dispatch
+  * ([[MediaHashStore]]): each micro-batch of arriving
+  * (media_id, text, content) rows is DECODED ONCE and its dHashes
+  * appended as the batch's own day with the day's source digest,
+  * exactly once ([[StoreKernel.advanceOnce]]), so q197/q198's dispatch
   * ([[MediaHashStore.openFreshFor]]) reads an index current through
-  * the last committed batch — the corpus decode happens at ingest,
-  * exactly once per payload, and a suite edit later probes stored
-  * 16-byte hashes instead of re-rendering terabytes of images.
-  *
-  * Exactly-once by the tier's two moves:
-  * [[MediaHashStore.advanceDaySourced]] is convergent under replay
-  * (unconditional retire-then-write, SOURCE meta commit point last —
-  * a crashed advance's orphan day is invisible to `openFreshFor`) and
-  * the control-table batch marker makes a committed replay skip the
-  * decode entirely. Per micro-batch the cost is one batch-sized decode
-  * pass + two one-row digests + one partition write + one PK insert —
-  * nothing scales with the stored history.
+  * the last committed batch.
   */
 object MediaHashMaintainer {
 
   /** Advance the store by one micro-batch of (media_id, text, content)
     * rows exactly once; returns true when this call performed the
-    * advance (false = committed replay skipped). The batch id doubles
-    * as the store day — build with a day outside the stream's batch-id
-    * range (e.g. -1 for the initial backfill). The SOURCE digest is
-    * taken over (media_id, text) — the cheap per-row key the probe
-    * callers hold; payload bytes never outlive the hashing pass. */
+    * advance. The batch id doubles as the store day — build with a day
+    * outside the stream's batch-id range (e.g. -1 for the backfill). */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // The source digest and the hash rows must derive from the SAME
-      // evaluation of a possibly non-deterministic upstream (the
-      // WinnowStore.writeDay argument) — but pinning the RAW batch
-      // would cache every payload byte for the length of the advance
-      // (review r15 finding 4). Instead the hashing pass carries the
-      // caption through and the pinned relation is the NARROW
-      // (media_id, text, dhash) output: payloads dropped in-pass,
-      // consistency by construction.
-      // Caches.scoped (ADVICE r15): any kernel pins release on failure
-      // too, and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        val pinned = MediaDedup.hashImagesWithSource(
-          batch.select(col("media_id"), col("text"), col("content"))).persist()
-        try {
-          MediaHashStore.advanceDaySourced(
-            pinned.select("media_id", "text"),
-            pinned.select("media_id", "dhash"),
-            dir, BatchDay.of(batchId))
-        } finally pinned.unpersist(blocking = false): Unit
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    StoreKernel.advanceOnce(store, sinkId, batchId)(advance(batch, dir, batchId))
 
   /** Wire a streaming media DataFrame (media_id, text, content) into
-    * the maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * the maintainer. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
+    StoreKernel.exactlyOnce(stream, store, sinkId)(advance(_, dir, _))
+
+  /** The source digest and the hash rows must derive from ONE
+    * evaluation of the batch, but pinning the raw batch would cache
+    * every payload byte: the hashing pass carries the caption through
+    * and the pin is the NARROW (media_id, text, dhash) output. */
+  private def advance(batch: DataFrame, dir: String, batchId: Long): Unit =
+    StoreKernel.pinned(MediaDedup.hashImagesWithSource(
+        batch.select(col("media_id"), col("text"), col("content")))) { hashed =>
+      MediaHashStore.advanceDaySourced(hashed.select("media_id", "text"),
+        hashed.select("media_id", "dhash"), dir, StoreKernel.dayOf(batchId))
     }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.sources.SemanticDeconStore
+import graft.sources.{SemanticDeconStore, StoreKernel}
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the semantic decontamination store
@@ -20,38 +20,24 @@ import graft.state.JdbcStateStore
   * batch) lands as the new content; a retire needs no embeddings
   * (its vec_id/embedding are ignored).
   *
-  * Exactly-once by the tier's two moves: [[SemanticDeconStore
-  * .advanceBenchmark]] is convergent under replay (retire-then-write
-  * against the FROZEN codebook, meta commit point last) and the
-  * control-table batch marker skips committed replays. A crash
-  * mid-retire leaves metas the combined digest no longer covers →
-  * readers fall back inline — cost, never a stale verdict
-  * (spec-pinned). Per batch the cost is one bounded distinct over the
-  * batch's (bench, action) pairs plus one batch-sized assignment per
-  * advanced benchmark — nothing scales with the stored suite.
+  * Exactly-once via [[StoreKernel.advanceOnce]] over the shared
+  * [[SuiteEditBatch]] protocol; suite edits are benchmark-sized, never
+  * corpus-sized.
   */
 object SemanticDeconMaintainer {
 
-  /** Apply one micro-batch of suite edits exactly once (the shared
-    * [[SuiteEditBatch]] protocol — pinned batch, retires first,
-    * unknown actions fail loud BEFORE the marker commits); returns
-    * true when this call applied them. */
+  /** Apply one micro-batch of suite edits exactly once; returns true
+    * when this call applied them. */
   def applyBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
-      dir: String, batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    SuiteEditBatch.applyOnce(batch, store, sinkId, batchId)(
-      SemanticDeconStore.retireBenchmark(_, spark, dir),
-      (b, rows) => SemanticDeconStore.advanceBenchmark(b,
-        rows.select("vec_id", "embedding"), dir))
-  }
+      dir: String, batchId: Long): Boolean =
+    StoreKernel.advanceOnce(store, sinkId, batchId)(apply(batch, dir))
 
-  /** Wire a streaming suite-edit DataFrame
-    * (bench, action, vec_id, embedding) into the maintainer. Caller
-    * starts it (and owns checkpointLocation, trigger, etc.). */
+  /** Wire a streaming suite-edit DataFrame into the maintainer. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applyBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    StoreKernel.exactlyOnce(stream, store, sinkId)((df, _) => apply(df, dir))
+
+  private def apply(batch: DataFrame, dir: String): Unit =
+    SuiteEditBatch(batch)(SemanticDeconStore.retireBenchmark(_, batch.sparkSession, dir),
+      (b, rows) => SemanticDeconStore.advanceBenchmark(b, rows.select("vec_id", "embedding"), dir))
 }

@@ -3,57 +3,36 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-import graft.state.JdbcStateStore
+import graft.sources.StoreKernel
 
-/** The shared exactly-once SUITE-EDIT protocol both decon-store
-  * maintainers ride ([[SemanticDeconMaintainer]], [[DeconMaintainer]])
-  * — extracted (review r15) so the batch discipline lives once:
+/** The suite-edit protocol of the decon-store maintainers
+  * ([[SemanticDeconMaintainer]], [[DeconMaintainer]], the suite face of
+  * [[VerdictMaintainer]]), applied exactly once per micro-batch through
+  * [[StoreKernel.advanceOnce]]:
   *
-  *  - committed replays skip before any work;
-  *  - the batch is pinned across the event collect and every advance
-  *    (a non-deterministic upstream must not tear one benchmark's rows
-  *    across two evaluations);
+  *  - the batch is pinned across the event collect and every advance;
   *  - retires apply FIRST, so a replacement (retire + advance in one
   *    batch) lands as the new content;
   *  - an UNKNOWN action fails LOUD before anything applies and before
-  *    the marker commits: the old per-maintainer copies silently
-  *    dropped such rows and then marked the batch committed, losing
-  *    the edit permanently behind the exactly-once marker (review r15
-  *    finding 1) — failing the micro-batch instead makes Structured
-  *    Streaming redeliver it once the producer is fixed;
-  *  - the marker commits LAST.
+  *    the marker commits — marking the batch would lose the edit for
+  *    good, failing it makes Structured Streaming redeliver it.
   */
 private[streaming] object SuiteEditBatch {
 
-  /** Apply one micro-batch of (bench, action, …payload) edit events
-    * exactly once; `retire`/`advance` are the store's two moves, with
-    * `advance` receiving the pinned batch's rows for its benchmark.
-    * Returns true when this call applied the batch. */
-  def applyOnce(batch: DataFrame, store: JdbcStateStore, sinkId: String,
-      batchId: Long)(retire: String => Unit,
-      advance: (String, DataFrame) => Unit): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped (ADVICE r15): the advances' kernel pins release
-      // on failure too, and only THIS batch's pins — a concurrent
-      // stream in the same session keeps its own.
-      graft.core.Caches.scoped {
-        val pinned = batch.persist()
-        try {
-          // Bounded collect: one row per (benchmark, action) in the batch
-          // — suite edits are benchmark-sized, never corpus-sized.
-          val events = pinned.select("bench", "action").distinct().collect()
-            .map(r => (r.getString(0), r.getString(1)))
-          val unknown = events.filter(e => e._2 != "advance" && e._2 != "retire")
-          require(unknown.isEmpty,
-            s"unknown suite-edit action(s) ${unknown.mkString(", ")} — " +
-              "refusing to commit a batch that would silently drop edits")
-          events.collect { case (b, "retire") => b }.sorted.foreach(retire)
-          events.collect { case (b, "advance") => b }.sorted.foreach(b =>
-            advance(b,
-              pinned.filter(col("bench") === b && col("action") === "advance")))
-        } finally pinned.unpersist(blocking = false): Unit
-      }
-      store.markBatch(sinkId, batchId)
+  /** Apply one micro-batch of (bench, action, …payload) edit events;
+    * `advance` receives the pinned batch's rows for its benchmark. */
+  def apply(batch: DataFrame)(retire: String => Unit,
+      advance: (String, DataFrame) => Unit): Unit =
+    StoreKernel.pinned(batch) { pinned =>
+      // one row per (benchmark, action): suite edits are benchmark-sized
+      val events = pinned.select("bench", "action").distinct().collect()
+        .map(r => (r.getString(0), r.getString(1)))
+      val unknown = events.filter(e => e._2 != "advance" && e._2 != "retire")
+      require(unknown.isEmpty,
+        s"unknown suite-edit action(s) ${unknown.mkString(", ")} — " +
+          "refusing to commit a batch that would silently drop edits")
+      events.collect { case (b, "retire") => b }.sorted.foreach(retire)
+      events.collect { case (b, "advance") => b }.sorted.foreach(b =>
+        advance(b, pinned.filter(col("bench") === b && col("action") === "advance")))
     }
 }

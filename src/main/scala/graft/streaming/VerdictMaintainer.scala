@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.DataStreamWriter
 
-import graft.sources.VerdictStore
+import graft.sources.{StoreKernel, VerdictStore}
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the [[VerdictStore]] — the decon tier's
@@ -21,13 +21,9 @@ import graft.state.JdbcStateStore
   *    benchmark's evidence with ZERO probes, advances probe the
   *    stored history ONCE against the new benchmark alone.
   *
-  * Exactly-once by the tier's two moves: every [[VerdictStore]]
-  * advance is convergent under replay (unconditional retire-then-
-  * write, meta commit point LAST, only live-meta partitions readable)
-  * and the control-table batch marker makes a committed replay skip
-  * the probes entirely. Batch payloads are decoded ONCE here, at
-  * ingest ([[graft.multimodal.MediaDedup.hashImages]]) — the store
-  * itself never sees a payload byte.
+  * Exactly-once via [[StoreKernel.advanceOnce]]. Batch payloads are
+  * decoded ONCE here, at ingest ([[graft.multimodal.MediaDedup.hashImages]])
+  * — the store itself never sees a payload byte.
   */
 object VerdictMaintainer {
 
@@ -61,13 +57,7 @@ object VerdictMaintainer {
   def advanceBatch(batch: DataFrame, suite: Seq[(String, VerdictStore.Corpus)],
       store: JdbcStateStore, sinkId: String, dir: String,
       batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // advanceDay brackets itself in Caches.scoped (pins release on
-      // failure too, never a sibling stream's).
-      VerdictStore.advanceDay(corpusOf(batch), suite, dir, BatchDay.of(batchId))
-      store.markBatch(sinkId, batchId)
-    }
+    StoreKernel.advanceOnce(store, sinkId, batchId)(advance(batch, suite, dir, batchId))
 
   /** Wire a streaming (doc_id, text, embedding, content) DataFrame
     * into the ingest maintainer. Caller starts it (and owns
@@ -77,36 +67,32 @@ object VerdictMaintainer {
   def exactlyOnce(stream: DataFrame, suite: Seq[(String, VerdictStore.Corpus)],
       store: JdbcStateStore, sinkId: String, dir: String)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, suite, store, sinkId, dir, batchId)
-      ()
-    }
+    StoreKernel.exactlyOnce(stream, store, sinkId)(advance(_, suite, dir, _))
+
+  private def advance(batch: DataFrame, suite: Seq[(String, VerdictStore.Corpus)],
+      dir: String, batchId: Long): Unit =
+    VerdictStore.advanceDay(corpusOf(batch), suite, dir, StoreKernel.dayOf(batchId))
 
   /** Apply one micro-batch of suite edits exactly once (the shared
-    * [[SuiteEditBatch]] protocol — pinned batch, retires first,
-    * unknown actions fail loud BEFORE the marker commits); returns
-    * true when this call applied them. Event schema: (bench, action,
-    * doc_id, text, embedding, content) with action ∈ {advance,
-    * retire}; a retire needs no docs. `history` is the full stored
-    * train corpus's relations (lazy plans — only an ADVANCE evaluates
-    * them, for its one history probe; digest-verified against the
-    * live day metas inside the advance). */
+    * [[SuiteEditBatch]] protocol); returns true when this call applied
+    * them. Event schema: (bench, action, doc_id, text, embedding,
+    * content) with action ∈ {advance, retire}; a retire needs no docs.
+    * `history` is the full stored train corpus's relations (lazy plans
+    * — only an ADVANCE evaluates them, for its one history probe;
+    * digest-verified against the live day metas inside the advance). */
   def applySuiteBatch(batch: DataFrame, history: VerdictStore.Corpus,
       store: JdbcStateStore, sinkId: String, dir: String,
-      batchId: Long): Boolean = {
-    val spark = batch.sparkSession
-    SuiteEditBatch.applyOnce(batch, store, sinkId, batchId)(
-      VerdictStore.retireBenchmark(_, spark, dir),
-      (b, rows) => VerdictStore.advanceBenchmark(b, corpusOf(rows), history, dir))
-  }
+      batchId: Long): Boolean =
+    StoreKernel.advanceOnce(store, sinkId, batchId)(applySuite(batch, history, dir))
 
   /** Wire a streaming suite-edit DataFrame into the suite face. Caller
     * starts it. */
   def exactlyOnceSuite(stream: DataFrame, history: VerdictStore.Corpus,
       store: JdbcStateStore, sinkId: String, dir: String)
       : DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      applySuiteBatch(df, history, store, sinkId, dir, batchId)
-      ()
-    }
+    StoreKernel.exactlyOnce(stream, store, sinkId)((df, _) => applySuite(df, history, dir))
+
+  private def applySuite(batch: DataFrame, history: VerdictStore.Corpus, dir: String): Unit =
+    SuiteEditBatch(batch)(VerdictStore.retireBenchmark(_, batch.sparkSession, dir),
+      (b, rows) => VerdictStore.advanceBenchmark(b, corpusOf(rows), history, dir))
 }

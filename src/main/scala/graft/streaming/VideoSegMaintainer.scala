@@ -4,55 +4,31 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.multimodal.VideoSegDedup
-import graft.sources.VideoSegStore
+import graft.sources.{StoreKernel, VideoSegStore}
 import graft.state.JdbcStateStore
 
 /** Streaming maintenance of the video segment fingerprint index
-  * ([[VideoSegStore]]) — the [[WinnowMaintainer]] contract for the
-  * third media modality, completing the tier's framing (every heavy
-  * artifact gets store + advance/retire + maintainer): each
-  * micro-batch of arriving videos is DECODED ONCE, its segment
-  * fingerprints appended as the batch's own day partition exactly
-  * once, so the daily shared-segment pass reads an index already
-  * current through the last committed batch and never touches a
-  * container byte.
-  *
-  * Exactly-once by the same two moves: [[VideoSegStore.advanceDay]]
-  * is convergent under replay (retire-then-rewrite, meta commit point
-  * last, digest computed from the just-written partition — the decode
-  * behind the fingerprints must never be trusted to reproduce
-  * byte-identically on a replayed plan), and the control-table batch
-  * marker makes a committed replay skip the decode entirely. Per
-  * micro-batch the cost is one batch-sized decode pass + one
-  * partition write + one PK insert — nothing scales with the stored
-  * history.
+  * ([[VideoSegStore]]): each micro-batch of arriving videos is DECODED
+  * ONCE and its segment fingerprints appended as the batch's own day
+  * exactly once ([[StoreKernel.advanceOnce]]) — a committed replay
+  * skips the decode entirely.
   */
 object VideoSegMaintainer {
 
   /** Advance the store by one micro-batch of (video_id, content)
     * payloads exactly once; returns true when this call performed the
-    * advance (false = committed replay skipped). The batch id doubles
-    * as the store day. */
+    * advance. The batch id doubles as the store day. */
   def advanceBatch(batch: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String, batchId: Long): Boolean =
-    if (store.batchCommitted(sinkId, batchId)) false
-    else {
-      // Caches.scoped (ADVICE r15): kernel pins release on failure too,
-      // and only this batch's — never a sibling stream's.
-      graft.core.Caches.scoped {
-        VideoSegStore.advanceDay(
-          VideoSegDedup.segmentFingerprints(batch), dir, BatchDay.of(batchId))
-      }
-      store.markBatch(sinkId, batchId)
-    }
+    StoreKernel.advanceOnce(store, sinkId, batchId)(advance(batch, dir, batchId))
 
   /** Wire a streaming video DataFrame (video_id, content) into the
-    * maintainer. Caller starts it (and owns checkpointLocation,
-    * trigger, etc.). */
+    * maintainer. */
   def exactlyOnce(stream: DataFrame, store: JdbcStateStore, sinkId: String,
       dir: String): DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch { (df: DataFrame, batchId: Long) =>
-      advanceBatch(df, store, sinkId, dir, batchId)
-      ()
-    }
+    StoreKernel.exactlyOnce(stream, store, sinkId)(advance(_, dir, _))
+
+  private def advance(batch: DataFrame, dir: String, batchId: Long): Unit =
+    VideoSegStore.advanceDay(
+      VideoSegDedup.segmentFingerprints(batch), dir, StoreKernel.dayOf(batchId))
 }

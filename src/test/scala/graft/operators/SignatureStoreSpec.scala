@@ -145,4 +145,21 @@ class SignatureStoreSpec extends SparkSpec {
       assert(left == Set(10L, 20L), s"day-0 signatures must be gone: $left")
     }
   }
+
+  test("retiring the last live day serves typed empty relations for an empty corpus") {
+    val dir = tmpDir("sigstore_empty")
+    SignatureStore.build(corpusDf, dir, day = 0)
+    Caches.releaseAll()
+    SignatureStore.retireDay(spark, dir, day = 0)
+    val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
+    withStore(dir) {
+      val store = SignatureStore.openFresh(empty)
+      assert(store.isDefined, "a fully retired store is fresh for the empty corpus, not unreadable")
+      assert(store.get.shingles.columns.toSeq == Seq("doc_id", "sh"))
+      assert(store.get.sigs.columns.toSeq == "doc_id" +: (0 until 20).map(i => s"s$i"))
+      assert(store.get.shingles.count() == 0 && store.get.sigs.count() == 0)
+      assert(SignatureStore.openFresh(corpusDf).isEmpty,
+        "and stale for a corpus that still has documents")
+    }
+  }
 }
